@@ -2,20 +2,14 @@
 columns + typed metadata, decoded / feature-extracted via Arrow-batched
 mapInPandas (north-star surface; BASELINE.json).
 
-Decode status (r8): the UNCOMPRESSED-format decodes are REAL and
-self-contained — PNG (stdlib zlib/struct: chunk walk, CRC checks,
-IDAT inflate, scanline de-filter; blobs.py::png_decode, since r7),
-PCM WAV (stdlib struct + numpy: RIFF walk, fmt geometry cross-check,
-int16 frame decode; blobs.py::wav_decode, r8), and uncompressed AVI
-video (RIFF/list tree walk, header cross-checks, raw 24-bit DIB
-frames de-padded + re-flipped to RGB; blobs.py::avi_decode, r8) —
-all round-tripped against standards-shaped encoders and hash-checked
-by DuckDB oracles that recompute what a correct decoder must report
-(multimodal_image_meta, multimodal_audio_decode,
-multimodal_video_decode). The remaining boundary is COMPRESSED
-codecs (JPEG/mp3/aac/h264): this container
-ships no codec libraries, so those paths stay behind the documented
-import-try; swapping PIL/ffmpeg in changes only the pure-Python codec
-functions — the Spark-side plumbing (binary schema, partitioning, UDF
-signatures, Arrow batch shapes) is identical and tested.
+Every codec is REAL and self-contained (stdlib + numpy, no media
+libraries): uncompressed PNG/WAV/AVI and MJPEG-in-AVI (blobs.py),
+baseline JPEG (jpeg.py), GIF/LZW (gif.py), IMA ADPCM (adpcm.py),
+DEFLATE/zlib inflate (inflate.py), FLAC (flac.py), adaptive
+arithmetic coding (rangecoder.py), motion-compensated MPV1
+(mpeg.py), MDCT perceptual audio MAU1/MAU2 (mdct.py) and H.264-style
+AVC intra with CAVLC (avc.py, cavlc.py). blobs.RUNGS lists the codec
+ladder as data — generator, encoder, decoder, summary, contract —
+and blobs.run_rung runs any rung as one fused mapInPandas; DuckDB
+oracles recompute what a correct decoder must report (queries.py).
 """

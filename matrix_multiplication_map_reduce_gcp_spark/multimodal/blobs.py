@@ -1,34 +1,47 @@
-"""Binary-column operators via mapInPandas.
+"""The multimodal codec ladder as data: codec primitives, one `Rung`
+table and one function that runs any rung as a fused `mapInPandas`.
 
-`with_blob` manufactures a binary column from document text;
-`with_png_blob` goes further and encodes REAL PNG files (stdlib
-zlib/struct — signature, IHDR, IDAT with per-scanline filter bytes,
-CRCs, IEND) whose dimensions and pixels derive deterministically from
-the text. `decode_image_meta` then performs a REAL decode: it parses
-the chunk stream, validates CRCs, inflates IDAT, strips scanline
-filters, and reports metadata plus a pixel checksum — nothing is
-passed side-band from the encoder. Swapping the codec for PIL/ffmpeg
-changes only the two pure-Python codec functions; the Spark plumbing
-(schema, Arrow batching, partitioning) is identical.
+Each rung turns document text into a REAL media file and decodes it
+back: `gen` derives the encoder arguments from the text bytes (so a
+SQL oracle can predict what a correct decoder must report),
+`encode`/`decode` are the codec's writer and reader (PNG, WAV, AVI and
+MJPEG-AVI here, the rest in the sibling modules), and `summarize`
+reports what the decoder recovered — nothing passes side-band from the
+encoder. `run_rung` runs the chain per document inside ONE
+Arrow-batched mapInPandas, so the blob is never materialized.
 
-IMPORTANT (worker serialization): every function passed to
-mapInPandas is a self-contained closure — no references to this
-package's module globals — so cloudpickle ships it by value and the
-Python workers never need the package importable on their sys.path.
+IMPORTANT (worker serialization): this module and every codec module
+it imports are registered pickle-by-value, so the functions a rung
+ships to mapInPandas travel inside the pickled closure and the Python
+workers never need the package importable on their sys.path.
 """
 
 from __future__ import annotations
 
 import sys
+from typing import Callable, NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The PNG codec functions below are captured by mapInPandas closures.
+# The codec functions below are captured by mapInPandas closures.
 # Python workers do NOT have this package on sys.path, so module
 # globals must ship BY VALUE inside the pickled closure instead of by
 # module reference — cloudpickle supports exactly this opt-in.
 from pyspark import cloudpickle
+
+from .adpcm import ADPCM_TOL, SAMPLES_PER_BLOCK, adpcm_wav_decode, adpcm_wav_encode
+from .avc import AVC_TOL, DC, HOR, VERT, avc_decode, avc_encode_stats
+from .cavlc import avcc_decode, avcc_encode_stats
+from .flac import flac_decode, flac_encode
+from .gif import gif_decode, gif_encode
+from .inflate import adler32_spec, zlib_inflate, zlib_multiblock_compress
+from .jpeg import JPEG_TOL, jpeg_decode, jpeg_encode
+from .mdct import MAU2_SNR_FLOOR_DB, MAU2_TOL, MAU_TOL, mau2_decode, mau2_encode
+from .mdct import mau_decode, mau_encode
+from .mpeg import MB, MPEG_TOL, mpeg_decode, mpeg_encode_stats
+from .rangecoder import rc_decode, rc_encode
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -37,11 +50,6 @@ DECODE_SCHEMA = (
     "n_pixels long, pixel_sum long"
 )
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame_offset long"
-
-
-def with_blob(docs: DataFrame) -> DataFrame:
-    """Attach the opaque binary column (+ keep doc_id)."""
-    return docs.select("doc_id", F.encode("text", "utf-8").alias("blob"))
 
 
 def png_encode(
@@ -246,156 +254,6 @@ def png_decode(data: bytes) -> tuple[int, int, int, bytes]:
     return width, height, channels, img.tobytes()
 
 
-def with_png_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) where blob is a REAL PNG: width/height from the
-    first/last text byte (1..8 each), truecolor iff the byte length is
-    even, pixels cycling through the text bytes."""
-    encode = png_encode  # bind by value for the worker closure
-
-    def op(batches):
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    # The SQL oracles index text by CHARACTER
-                    # (ascii(substr)) while this generator indexes
-                    # UTF-8 BYTES — identical only for ASCII. A
-                    # non-ASCII doc must raise loudly, never
-                    # silently diverge from the oracle (ADVICE r8;
-                    # corpus ASCII-ness is also pinned in
-                    # tests/test_multimodal.py).
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                w = 1 + (b[0] % 8) if b else 1
-                h = 1 + (b[-1] % 8) if b else 1
-                ch = 3 if len(b) % 2 == 0 else 1
-                need = w * h * ch
-                px = (b * (need // max(1, len(b)) + 1))[:need] if b else b"\x00" * need
-                rows.append((doc_id, encode(w, h, ch, px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    return docs.select("doc_id", "text").mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_image_meta(docs: DataFrame) -> DataFrame:
-    """(doc_id, width, height, channels, n_pixels, pixel_sum) via
-    Arrow-batched mapInPandas — one Python crossing per batch, not per
-    row. The decode is REAL: everything reported is recovered from the
-    PNG byte stream (chunk walk, CRC check, inflate, de-filter), never
-    from the generation parameters."""
-    decode = png_decode
-
-    def op(batches):
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, ch, px = decode(bytes(blob))
-                rows.append((doc_id, w, h, ch, w * h, sum(px)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "n_pixels", "pixel_sum",
-                ],
-            )
-            rows = []
-
-    return with_png_blob(docs).mapInPandas(op, DECODE_SCHEMA)
-
-
-def with_png_blob_filtered(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) at the LARGER ladder geometry with Up-filtered
-    scanlines: 16..32 px per side (width from the first text byte,
-    height from the last), always truecolor, pixel i =
-    (byte[i mod n] + (i // 7) * 13) mod 256, rows stored as filter-2
-    deltas before deflate — the shape real encoders emit. Geometry is
-    bounded at 32x32x3 = 3072 px so the SQL oracle's per-pixel UNNEST
-    stays ~1.5M rows at sf0.01.
-
-    Unlike the header-light decode trilogy, this stage is CPU-bound
-    (inflate + de-filter over ~3 KB of pixels/doc), so decode
-    parallelism must not be hostage to file layout: a single-file
-    corpus plans as ONE input partition and would serialize the whole
-    codec on one core (measured 1.8 s at sf0.1 on local[32]). The
-    deliberate round-robin repartition of the tiny (doc_id, text)
-    rows below is the production shape for CPU-heavy codecs over few
-    large files — the one Exchange this query's plan gate allows."""
-    encode = png_encode  # bind by value for the worker closure
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    # Same ASCII corpus contract as every byte-indexed
-                    # generator (see with_png_blob).
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 16 + (b[0] % 17) if n else 16
-                h = 16 + (b[-1] % 17) if n else 16
-                m = w * h * 3
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                px = ((src + (i // 7) * 13) % 256).astype(np.uint8).tobytes()
-                rows.append((doc_id, encode(w, h, 3, px, row_filter=2)))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_image_meta_filtered(docs: DataFrame) -> DataFrame:
-    """decode_image_meta over the filtered/large-geometry blobs: the
-    decoder must reverse the Up filter on every scanline before the
-    reported pixel_sum can match the oracle's per-pixel recompute —
-    a filter-ignoring reader fails the content hash, not just a
-    header check."""
-    decode = png_decode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, ch, px = decode(bytes(blob))
-                psum = int(np.frombuffer(px, dtype=np.uint8).sum(dtype=np.int64))
-                rows.append((doc_id, w, h, ch, w * h, psum))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "n_pixels", "pixel_sum",
-                ],
-            )
-            rows = []
-
-    return with_png_blob_filtered(docs).mapInPandas(op, DECODE_SCHEMA)
-
-
 def png_encode_adam7(
     width: int, height: int, channels: int, pixels: bytes, row_filter: int = 2
 ) -> bytes:
@@ -455,294 +313,6 @@ def png_encode_adam7(
 # 1..32-px strides); max term 9973*255*3072 per doc stays far inside
 # int64.
 ADAM7_W_MOD = 9973
-
-
-def with_png_blob_adam7(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) ADAM7-INTERLACED at the filtered ladder's
-    geometry: 16..32 px per side (width from the first text byte,
-    height from the last), truecolor, pixel i =
-    (byte[i mod n] + (i // 5) * 11) mod 256, each pass Up-filtered
-    independently before the shared deflate. Same CPU-bound
-    round-robin repartition rationale as with_png_blob_filtered."""
-    encode = png_encode_adam7  # bind by value for the worker closure
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 16 + (b[0] % 17) if n else 16
-                h = 16 + (b[-1] % 17) if n else 16
-                m = w * h * 3
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                px = ((src + (i // 5) * 11) % 256).astype(np.uint8).tobytes()
-                rows.append((doc_id, encode(w, h, 3, px, row_filter=2)))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_image_meta_adam7(docs: DataFrame) -> DataFrame:
-    """decode_image_meta over the Adam7 blobs, with the
-    POSITION-WEIGHTED digest alongside pixel_sum: de-interlacing must
-    put every pass's pixels on exactly the right raster cells for
-    pos_weighted_sum to match the oracle's raster-order recompute —
-    a decoder that merely concatenates de-filtered passes (right
-    values, wrong order) fails it."""
-    decode = png_decode
-    wmod = ADAM7_W_MOD
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, ch, px = decode(bytes(blob))
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                i = np.arange(arr.size, dtype=np.int64)
-                psum = int(arr.sum())
-                wsum = int(((i % wmod + 1) * arr).sum())
-                rows.append((doc_id, w, h, ch, w * h, psum, wsum))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels",
-                    "n_pixels", "pixel_sum", "pos_weighted_sum",
-                ],
-            )
-            rows = []
-
-    return with_png_blob_adam7(docs).mapInPandas(
-        op, DECODE_SCHEMA + ", pos_weighted_sum long"
-    )
-
-
-def with_jpeg_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a REAL baseline JPEG (SOF0,
-    4:4:4, Annex-K Huffman entropy coding, flat quant table) at the
-    ladder geometry: 16..32 px per side (width from the first text
-    byte, height from the last), truecolor, pixel i =
-    (byte[i mod n] + (i // 3) * 7) mod 256. ``text`` rides along so
-    the round-trip stage can regenerate the EXPECTED pixels and bound
-    reconstruction error against the true source, not an
-    encode/decode fixpoint. Same CPU-bound round-robin repartition
-    rationale as with_png_blob_filtered — entropy coding is the most
-    CPU-intensive codec stage in the ladder."""
-    from .jpeg import jpeg_encode
-
-    encode = jpeg_encode  # bind by value for the worker closure
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 16 + (b[0] % 17) if n else 16
-                h = 16 + (b[-1] % 17) if n else 16
-                m = w * h * 3
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                px = ((src + (i // 3) * 7) % 256).astype(np.uint8).tobytes()
-                rows.append((doc_id, text, encode(w, h, px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-JPEG_ROUNDTRIP_SCHEMA = (
-    "doc_id long, width int, height int, channels int, "
-    "n_pixels long, within_tolerance boolean"
-)
-
-
-def decode_jpeg_roundtrip(docs: DataFrame) -> DataFrame:
-    """Decode the real JPEG blobs and bound reconstruction error
-    against the regenerated SOURCE pixels: within_tolerance =
-    (max abs pixel error <= JPEG_TOL). JPEG is lossy, so the oracle
-    cannot recompute pixel values in SQL; this is the repo's
-    approx-sketch contract instead — geometry columns are
-    SQL-recomputed exactly and the oracle expects within_tolerance
-    TRUE for every doc, so a codec regression (wrong Huffman table,
-    misplaced block, broken predictor) is a driver-red hash mismatch,
-    not a silent quality drift. The pytest side additionally pins the
-    measured error ceiling and real-compression behavior."""
-    from .jpeg import JPEG_TOL, jpeg_decode
-
-    decode = jpeg_decode
-    tol = JPEG_TOL
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text, blob in zip(
-                pdf["doc_id"], pdf["text"], pdf["blob"]
-            ):
-                w, h, ch, px = decode(bytes(blob))
-                b = text.encode("utf-8")
-                n = len(b)
-                m = w * h * 3
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                expected = ((src + (i // 3) * 7) % 256).astype(np.int64)
-                got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                max_err = int(np.abs(got - expected).max()) if m else 0
-                rows.append(
-                    (doc_id, w, h, ch, w * h, bool(max_err <= tol))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels",
-                    "n_pixels", "within_tolerance",
-                ],
-            )
-            rows = []
-
-    return with_jpeg_blob(docs).mapInPandas(op, JPEG_ROUNDTRIP_SCHEMA)
-
-
-AUDIO_SCHEMA = "doc_id long, window_idx int, mean_amplitude double, peak_amplitude int"
-
-
-def audio_window_features(docs: DataFrame, window_bytes: int = 256) -> DataFrame:
-    """'Audio' feature extraction: per fixed-size byte window, mean and
-    peak amplitude (bytes stand in for PCM samples — swap the body for
-    a real codec read; the windowed-feature plumbing is the operator).
-    The mean is int_sum/window_bytes with a power-of-two denominator —
-    a dyadic rational, exactly representable in double, so NO rounding
-    (rounding would hit exact .5 midpoints where Python banker's-rounds
-    and DuckDB half-up-rounds differently)."""
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                arr = np.frombuffer(blob, dtype=np.uint8)
-                for w in range(0, len(arr), window_bytes):
-                    chunk = arr[w : w + window_bytes]
-                    rows.append(
-                        (
-                            doc_id,
-                            w // window_bytes,
-                            int(chunk.sum()) / len(chunk),
-                            int(chunk.max()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "window_idx", "mean_amplitude", "peak_amplitude"]
-            )
-            rows = []
-
-    return with_blob(docs).mapInPandas(op, AUDIO_SCHEMA)
-
-
-def sample_frames(docs: DataFrame, stride: int = 1000) -> DataFrame:
-    """One row per sampled 'frame': ceil(n_bytes/stride) frames (min 1
-    for empty blobs) — the 1→N expansion shape of video frame
-    sampling. Ceil, not //+1: the latter emits a frame at
-    offset == n_bytes (past the end) whenever n_bytes is an exact
-    stride multiple."""
-
-    def op(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                n_frames = max(1, (len(blob) + stride - 1) // stride)
-                rows.extend((doc_id, idx, idx * stride) for idx in range(n_frames))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_offset"])
-
-    return with_blob(docs).mapInPandas(op, FRAMES_SCHEMA)
-
-
-PHASH_SCHEMA = "doc_id long, width int, height int, channels int, ahash long"
-
-
-def image_ahash(docs: DataFrame) -> DataFrame:
-    """(doc_id, width, height, channels, ahash) — average-hash
-    perceptual fingerprint over the REAL decoded pixels: bit i is set
-    iff pixel_i >= mean(pixels), first 60 pixels (bigint-safe, no sign
-    bit). The mean compare is the exact integer cross-multiply
-    px*n >= sum, so the hash is bit-reproducible in SQL. Identical
-    images (and byte-identical pixel streams) collide; the downstream
-    groupBy is the image-dedup step of a multimodal pipeline."""
-    decode = png_decode
-
-    def op(batches):
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, ch, px = decode(bytes(blob))
-                n, s = len(px), sum(px)
-                bits = 0
-                for i in range(min(60, n)):
-                    if px[i] * n >= s:
-                        bits |= 1 << i
-                rows.append((doc_id, w, h, ch, bits))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "channels", "ahash"]
-            )
-            rows = []
-
-    return with_png_blob(docs).mapInPandas(op, PHASH_SCHEMA)
-
-
-WAV_DECODE_SCHEMA = (
-    "doc_id long, sample_rate int, channels int, bit_depth int, "
-    "n_frames long, sample_sum long"
-)
 
 
 def wav_encode(sample_rate: int, channels: int, frames: bytes) -> bytes:
@@ -820,144 +390,6 @@ def wav_decode(data: bytes):
     if samples.size % channels:
         raise ValueError("corrupt WAV: data chunk not frame-aligned")
     return rate, channels, bits, samples.size // channels, samples
-
-
-def with_wav_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) where blob is a REAL PCM WAV whose geometry and
-    samples derive deterministically from the text bytes (so a SQL
-    oracle can predict what a correct decoder must report):
-    sample_rate = 8000 * (1 + first_byte % 3), stereo iff the byte
-    length is odd, n_frames = 1 + last_byte % 32, and sample k =
-    ((text_byte[k mod n] * 131 + k * 7919) mod 65536) - 32768."""
-    encode = wav_encode  # bind by value for the worker closure
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    # The SQL oracles index text by CHARACTER
-                    # (ascii(substr)) while this generator indexes
-                    # UTF-8 BYTES — identical only for ASCII. A
-                    # non-ASCII doc must raise loudly, never
-                    # silently diverge from the oracle (ADVICE r8;
-                    # corpus ASCII-ness is also pinned in
-                    # tests/test_multimodal.py).
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                rate = 8000 * (1 + (b[0] % 3)) if n else 8000
-                channels = 1 + n % 2
-                n_frames = 1 + (b[-1] % 32) if n else 1
-                m = n_frames * channels
-                idx = np.arange(m, dtype=np.int64)
-                t = (
-                    np.frombuffer(b, dtype=np.uint8)[idx % n].astype(np.int64)
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                v = (t * 131 + idx * 7919) % 65536 - 32768
-                rows.append((doc_id, encode(rate, channels, v.astype("<i2").tobytes())))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    return docs.select("doc_id", "text").mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_audio_meta(docs: DataFrame) -> DataFrame:
-    """(doc_id, sample_rate, channels, bit_depth, n_frames, sample_sum)
-    via Arrow-batched mapInPandas. The decode is REAL: every reported
-    value is recovered from the WAV byte stream (RIFF walk, fmt
-    geometry cross-check, int16 frame decode) — sample_sum covers the
-    decoded CONTENT, not just the header."""
-    decode = wav_decode
-
-    def op(batches):
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                rate, channels, bits, n_frames, samples = decode(bytes(blob))
-                rows.append(
-                    (doc_id, rate, channels, bits, n_frames,
-                     int(samples.astype("int64").sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "bit_depth",
-                    "n_frames", "sample_sum",
-                ],
-            )
-            rows = []
-
-    return with_wav_blob(docs).mapInPandas(op, WAV_DECODE_SCHEMA)
-
-
-ENVELOPE_SCHEMA = (
-    "doc_id long, sample_rate int, channels int, "
-    "n_blocks long, envelope_sum long"
-)
-
-
-def decode_audio_envelope(docs: DataFrame, factor: int = 4) -> DataFrame:
-    """Peak-decimation envelope extraction over the REAL decoded PCM
-    stream — the waveform-display / VAD-frontend downsample: per
-    channel, frames group into blocks of ``factor`` and each block
-    reports its MAX sample (max, not mean: integer-exact in SQL with
-    no floor-vs-truncate division hazard across engines). Returns
-    (doc_id, sample_rate, channels, n_blocks, envelope_sum) where
-    n_blocks = ceil(n_frames/factor) and envelope_sum is the int64
-    sum of every per-channel block peak — content-checking the whole
-    decimation, not just its shape."""
-    decode = wav_decode
-    k = int(factor)
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                rate, channels, bits, n_frames, samples = decode(bytes(blob))
-                frames = samples.astype(np.int64).reshape(n_frames, channels)
-                n_blocks = (n_frames + k - 1) // k
-                pad = n_blocks * k - n_frames
-                if pad:
-                    # -32768 is the int16 minimum: identity for MAX,
-                    # and partial blocks always hold >=1 real frame.
-                    frames = np.vstack(
-                        [frames, np.full((pad, channels), -32768, np.int64)]
-                    )
-                peaks = frames.reshape(n_blocks, k, channels).max(axis=1)
-                rows.append(
-                    (doc_id, rate, channels, n_blocks, int(peaks.sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels",
-                    "n_blocks", "envelope_sum",
-                ],
-            )
-            rows = []
-
-    return with_wav_blob(docs).mapInPandas(op, ENVELOPE_SCHEMA)
-
-
-AVI_DECODE_SCHEMA = (
-    "doc_id long, width int, height int, fps int, "
-    "n_frames long, pixel_sum long"
-)
 
 
 def avi_encode(width: int, height: int, fps: int, frames: list) -> bytes:
@@ -1102,407 +534,7 @@ def avi_decode(data: bytes):
     return width, height, fps, total_frames, frames
 
 
-def with_avi_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) where blob is a REAL uncompressed AVI whose
-    geometry and frame pixels derive deterministically from the text
-    bytes (SQL-predictable): width = 1 + first_byte % 8, height =
-    1 + last_byte % 8, fps = 5 * (1 + byte_length % 5), n_frames =
-    1 + (first_byte + last_byte) % 6, and pixel byte k of frame f =
-    (text_byte[(f*31 + k) mod n] + f*17) mod 256."""
-    encode = avi_encode  # bind by value for the worker closure
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    # The SQL oracles index text by CHARACTER
-                    # (ascii(substr)) while this generator indexes
-                    # UTF-8 BYTES — identical only for ASCII. A
-                    # non-ASCII doc must raise loudly, never
-                    # silently diverge from the oracle (ADVICE r8;
-                    # corpus ASCII-ness is also pinned in
-                    # tests/test_multimodal.py).
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 1 + (b[0] % 8) if n else 1
-                h = 1 + (b[-1] % 8) if n else 1
-                fps = 5 * (1 + n % 5)
-                nf = 1 + ((b[0] + b[-1]) % 6) if n else 1
-                sz = w * h * 3
-                frames = []
-                src = np.frombuffer(b, dtype=np.uint8).astype(np.int64) if n else None
-                for f in range(nf):
-                    k = np.arange(sz, dtype=np.int64)
-                    t = src[(f * 31 + k) % n] if n else np.zeros(sz, dtype=np.int64)
-                    frames.append(((t + f * 17) % 256).astype(np.uint8).tobytes())
-                rows.append((doc_id, encode(w, h, fps, frames)))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    return docs.select("doc_id", "text").mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_video_meta(docs: DataFrame) -> DataFrame:
-    """(doc_id, width, height, fps, n_frames, pixel_sum) via
-    Arrow-batched mapInPandas. The decode is REAL: every reported
-    value is recovered from the AVI byte stream (RIFF/list walk,
-    header cross-checks, DIB de-pad + re-flip) — pixel_sum covers the
-    decoded frame CONTENT across all frames, not just the headers."""
-    decode = avi_decode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, fps, nf, frames = decode(bytes(blob))
-                psum = sum(
-                    int(np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum())
-                    for f in frames
-                )
-                rows.append((doc_id, w, h, fps, nf, psum))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "fps", "n_frames", "pixel_sum"],
-            )
-            rows = []
-
-    return with_avi_blob(docs).mapInPandas(op, AVI_DECODE_SCHEMA)
-
-
-MOTION_SCHEMA = (
-    "doc_id long, n_frames long, n_transitions long, motion_sum long"
-)
-
-
-def decode_video_motion(docs: DataFrame) -> DataFrame:
-    """Temporal-difference motion metric over the REAL decoded frame
-    stream — the scene-change / static-clip signal a video curation
-    pipeline thresholds before frame sampling: motion_sum =
-    Σ_{t≥1} Σ_p |frame_t[p] − frame_{t−1}[p]| (exact integer L1 delta
-    between consecutive decoded RGB frames), n_transitions =
-    n_frames − 1. A single-frame clip reports (0 transitions, 0
-    motion). Content-checks every byte of every frame PAIR, a
-    stronger oracle than the per-frame sum."""
-    decode = avi_decode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, fps, nf, frames = decode(bytes(blob))
-                stack = np.stack(
-                    [np.frombuffer(f, dtype=np.uint8) for f in frames]
-                ).astype(np.int64)
-                motion = (
-                    int(np.abs(stack[1:] - stack[:-1]).sum()) if nf > 1 else 0
-                )
-                rows.append((doc_id, nf, max(nf - 1, 0), motion))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_frames", "n_transitions", "motion_sum"],
-            )
-            rows = []
-
-    return with_avi_blob(docs).mapInPandas(op, MOTION_SCHEMA)
-
-
-VIDEO_AHASH_SCHEMA = "doc_id long, frame_idx int, width int, height int, ahash long"
-
-
-def video_frame_ahash(docs: DataFrame) -> DataFrame:
-    """(doc_id, frame_idx, width, height, ahash) — the per-FRAME
-    average-hash over the REAL decoded AVI frames (decode → aHash in
-    one Arrow-batched pass). Same exact integer mean-compare as
-    image_ahash (bit i set iff pixel_byte_i * n >= sum over the whole
-    frame, first 60 bytes), so every bit is reproducible in SQL. This
-    is the unit of video dedup: identical frames collide regardless of
-    which video or position they appear in."""
-    decode = avi_decode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, _fps, _nf, frames = decode(bytes(blob))
-                for fi, fb in enumerate(frames):
-                    px = np.frombuffer(fb, dtype=np.uint8).astype(np.int64)
-                    n, s = px.size, int(px.sum())
-                    bits = 0
-                    for i in range(min(60, n)):
-                        if int(px[i]) * n >= s:
-                            bits |= 1 << i
-                    rows.append((doc_id, fi, w, h, bits))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "width", "height", "ahash"]
-            )
-            rows = []
-
-    return with_avi_blob(docs).mapInPandas(op, VIDEO_AHASH_SCHEMA)
-
-
-GIF_DECODE_SCHEMA = (
-    "doc_id long, width int, height int, n_px long, "
-    "index_sum long, pos_weighted_sum long, rgb_sum long"
-)
-
-
-def with_gif_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a REAL GIF89a (256-entry global
-    color table, variable-width LZW entropy coding — multimodal/gif.py)
-    at the ladder geometry: width = 16 + first_byte % 17, height =
-    16 + last_byte % 17, index i = (byte[(i//5) mod n] + i//64) % 256.
-    The run-of-5 structure makes LZW genuinely compress (pinned in
-    tests); the rule stays SQL-recomputable so the oracle checks every
-    decoded byte. Same CPU-bound round-robin repartition rationale as
-    with_jpeg_blob — entropy coding dominates the rung's cost."""
-    from .gif import gif_encode
-
-    encode = gif_encode  # bind by value for the worker closure
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 16 + (b[0] % 17) if n else 16
-                h = 16 + (b[-1] % 17) if n else 16
-                m = w * h
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[
-                        (i // 5) % n
-                    ]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                idx = ((src + i // 64) % 256).astype(np.uint8).tobytes()
-                rows.append((doc_id, text, encode(w, h, idx)))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-def decode_gif_meta(docs: DataFrame) -> DataFrame:
-    """Decode the real GIF blobs and report EXACT content sums over
-    the decoded index stream AND the decoded color table: index_sum /
-    pos_weighted_sum cover the LZW stream byte for byte, rgb_sum maps
-    every index through the palette actually read from the file —
-    unlike the lossy JPEG rung, every output column here is
-    SQL-recomputable, so the driver hash certifies the whole decode
-    path (bit unpacking, width bumps, sub-block framing, color
-    table) with no tolerance flag."""
-    from .gif import gif_decode
-
-    decode = gif_decode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                w, h, palette, indices = decode(bytes(blob))
-                idx = np.frombuffer(indices, dtype=np.uint8).astype(np.int64)
-                pal_sums = (
-                    np.frombuffer(palette, dtype=np.uint8)
-                    .reshape(256, 3)
-                    .astype(np.int64)
-                    .sum(axis=1)
-                )
-                m = idx.size
-                pos = np.arange(m, dtype=np.int64)
-                rows.append(
-                    (
-                        doc_id, w, h, m,
-                        int(idx.sum()),
-                        int((pos * idx).sum()),
-                        int(pal_sums[idx].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_px",
-                    "index_sum", "pos_weighted_sum", "rgb_sum",
-                ],
-            )
-            rows = []
-
-    return with_gif_blob(docs).mapInPandas(op, GIF_DECODE_SCHEMA)
-
-
-ADPCM_ROUNDTRIP_SCHEMA = (
-    "doc_id long, sample_rate int, n_blocks int, n_samples long, "
-    "first_sample int, within_tolerance boolean"
-)
-
-
-def with_adpcm_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a REAL IMA-ADPCM WAV (format tag
-    0x11, 256-byte blocks, fact chunk — multimodal/adpcm.py). Signal:
-    a varying-slope triangle wave, smooth everywhere so the 4-bit
-    codes track it — A_k = cumsum(1 + byte[k mod n] % 13), v = A_k mod
-    4096 reflected to a triangle, sample_k = (tri - 1024) * 8. Geometry:
-    sample_rate = 8000 * (1 + first_byte % 3), n_blocks = 1 + last_byte
-    % 4, n_samples = n_blocks * 505 (exact multiple — no final-block
-    padding). ``text`` rides along so the round-trip stage regenerates
-    the EXPECTED samples. The first sample 8*(1 + first_byte % 13) -
-    8192 is stored EXACTLY in the block header per the spec, giving the
-    oracle one SQL-recomputable CONTENT column even though ADPCM is
-    lossy."""
-    from .adpcm import SAMPLES_PER_BLOCK, adpcm_wav_encode
-
-    encode = adpcm_wav_encode
-    spb = SAMPLES_PER_BLOCK
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                rate = 8000 * (1 + (b[0] % 3)) if n else 8000
-                n_blocks = 1 + (b[-1] % 4) if n else 1
-                m = n_blocks * spb
-                k = np.arange(m, dtype=np.int64)
-                d = (
-                    1
-                    + np.frombuffer(b, dtype=np.uint8).astype(np.int64)[
-                        k % n
-                    ]
-                    % 13
-                    if n
-                    else np.ones(m, dtype=np.int64)
-                )
-                v = np.cumsum(d) % 4096
-                tri = np.where(v < 2048, v, 4095 - v)
-                s = ((tri - 1024) * 8).astype(np.int64)
-                rows.append((doc_id, text, encode(rate, s)))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-def decode_adpcm_roundtrip(docs: DataFrame) -> DataFrame:
-    """Decode the real IMA-ADPCM WAVs and bound reconstruction against
-    the regenerated SOURCE samples: within_tolerance = (max abs sample
-    error <= ADPCM_TOL). Same contract as the JPEG rung — geometry and
-    the exactly-stored block-header first sample are SQL-recomputed;
-    a step-table slip, nibble-order swap, or index-clamp bug reds the
-    driver hash via within_tolerance (a broken path errs in the
-    thousands, two orders past the transient bound)."""
-    from .adpcm import ADPCM_TOL, SAMPLES_PER_BLOCK, adpcm_wav_decode
-
-    decode = adpcm_wav_decode
-    spb = SAMPLES_PER_BLOCK
-    tol = ADPCM_TOL
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text, blob in zip(
-                pdf["doc_id"], pdf["text"], pdf["blob"]
-            ):
-                rate, n_samples, n_blocks, dec = decode(bytes(blob))
-                b = text.encode("utf-8")
-                n = len(b)
-                m = n_samples
-                k = np.arange(m, dtype=np.int64)
-                d = (
-                    1
-                    + np.frombuffer(b, dtype=np.uint8).astype(np.int64)[
-                        k % n
-                    ]
-                    % 13
-                    if n
-                    else np.ones(m, dtype=np.int64)
-                )
-                v = np.cumsum(d) % 4096
-                tri = np.where(v < 2048, v, 4095 - v)
-                expected = (tri - 1024) * 8
-                got = np.asarray(dec, dtype=np.int64)
-                max_err = int(np.abs(got - expected).max()) if m else 0
-                rows.append(
-                    (
-                        doc_id, rate, n_blocks, n_samples,
-                        int(got[0]) if m else 0,
-                        bool(max_err <= tol),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_blocks", "n_samples",
-                    "first_sample", "within_tolerance",
-                ],
-            )
-            rows = []
-
-    return with_adpcm_blob(docs).mapInPandas(op, ADPCM_ROUNDTRIP_SCHEMA)
-
-
-MJPEG_SCHEMA = (
-    "doc_id long, frame_idx int, width int, height int, "
-    "n_frames int, fps int, within_tolerance boolean"
-)
 _MJPG_FOURCC = 0x47504A4D  # 'MJPG' little-endian
-
-# Module-level binding, NOT a call-time relative import:
-# mjpeg_avi_decode executes INSIDE worker closures, and a `from .jpeg
-# import ...` at call time needs the package importable on the
-# worker's sys.path (it is not when cwd != repo root). Both this
-# module and jpeg.py are registered pickle-by-value, so a global
-# reference ships the decoder inside the closure.
-from .jpeg import jpeg_decode as _jpeg_frame_decode  # noqa: E402
 
 
 def mjpeg_avi_encode(width: int, height: int, fps: int, jpeg_frames: list) -> bytes:
@@ -1559,7 +591,6 @@ def mjpeg_avi_decode(data: bytes):
     buffers."""
     import struct
 
-    jpeg_decode = _jpeg_frame_decode
 
     if data[:4] != b"RIFF":
         raise ValueError("not an AVI: bad RIFF signature")
@@ -1639,214 +670,27 @@ def mjpeg_avi_decode(data: bytes):
     return width, height, fps, total_frames, frames
 
 
-def with_mjpeg_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a REAL MJPEG AVI: width =
-    16 + first_byte % 5, height = 16 + last_byte % 5, fps = 5 * (1 +
-    byte_length % 4), n_frames = 2 + (first_byte + last_byte) % 3,
-    frame f pixel i = (byte[i mod n] + (i//3)*7 + f*11) % 256 — the
-    JPEG rung's smooth content family shifted per frame so frame
-    ORDER is checkable. ``text`` rides along for the round-trip
-    stage."""
-    from .jpeg import jpeg_encode
-
-    encode_frame = jpeg_encode
-    encode_avi = mjpeg_avi_encode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 16 + (b[0] % 5) if n else 16
-                h = 16 + (b[-1] % 5) if n else 16
-                fps = 5 * (1 + n % 4)
-                nf = 2 + ((b[0] + b[-1]) % 3) if n else 2
-                m = w * h * 3
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                base = src + (i // 3) * 7
-                frames = [
-                    encode_frame(
-                        w, h, ((base + f * 11) % 256).astype(np.uint8).tobytes()
-                    )
-                    for f in range(nf)
-                ]
-                rows.append((doc_id, text, encode_avi(w, h, fps, frames)))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
+# ---------------------------------------------------------------------------
+# Raw byte plumbing (no codec): the text's UTF-8 bytes as the binary
+# column, windowed features and 1->N frame sampling over it.
 
 
-def decode_mjpeg_frames(docs: DataFrame) -> DataFrame:
-    """Decode the real MJPEG AVIs and bound every frame's
-    reconstruction against the regenerated per-frame source:
-    one output row per FRAME (doc_id, frame_idx, geometry, fps,
-    within_tolerance) — a dropped, reordered, or misdecoded frame
-    either changes the row set or reds within_tolerance, so the
-    driver hash certifies container walking AND per-frame entropy
-    decoding together.
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + per-frame JPEG encode + AVI mux + the real container
-    walk + per-frame entropy decode per document (the pixel base is
-    generated once, and (text, blob) never crosses an extra Arrow
-    boundary). Rows identical by construction; with_mjpeg_blob stays
-    as the standalone blob maker."""
-    from .jpeg import JPEG_TOL, jpeg_encode
-
-    encode_frame = jpeg_encode
-    encode_avi = mjpeg_avi_encode
-    decode = mjpeg_avi_decode
-    tol = JPEG_TOL
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                w = 16 + (b[0] % 5) if n else 16
-                h = 16 + (b[-1] % 5) if n else 16
-                fps = 5 * (1 + n % 4)
-                nf = 2 + ((b[0] + b[-1]) % 3) if n else 2
-                m = w * h * 3
-                i = np.arange(m, dtype=np.int64)
-                src = (
-                    np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                    if n
-                    else np.zeros(m, dtype=np.int64)
-                )
-                base = src + (i // 3) * 7
-                jframes = [
-                    encode_frame(
-                        w, h,
-                        ((base + f * 11) % 256).astype(np.uint8).tobytes(),
-                    )
-                    for f in range(nf)
-                ]
-                blob = encode_avi(w, h, fps, jframes)
-                # The query's claim: the REAL container walk +
-                # per-frame entropy decode.
-                w, h, fps, nf, frames = decode(blob)
-                for f, px in enumerate(frames):
-                    expected = (base + f * 11) % 256
-                    got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                    max_err = int(np.abs(got - expected).max()) if m else 0
-                    rows.append(
-                        (doc_id, f, w, h, nf, fps, bool(max_err <= tol))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height",
-                    "n_frames", "fps", "within_tolerance",
-                ],
-            )
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, MJPEG_SCHEMA)
+def with_blob(docs: DataFrame) -> DataFrame:
+    """Attach the opaque binary column (+ keep doc_id)."""
+    return docs.select("doc_id", F.encode("text", "utf-8").alias("blob"))
 
 
-DEFLATE_DECODE_SCHEMA = (
-    "doc_id long, n_bytes long, byte_sum long, pos_weighted_sum long, "
-    "adler32 long, has_all_btypes boolean"
-)
+AUDIO_SCHEMA = "doc_id long, window_idx int, mean_amplitude double, peak_amplitude int"
 
 
-def with_deflate_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) with blob a REAL zlib stream (RFC 1950 wrapper,
-    RFC 1951 body) produced by multimodal/inflate.py's multiblock
-    encoder: payload = the doc's ASCII bytes repeated k times,
-    k = 6 + first_byte % 5, so byte i of the payload is
-    text[(i mod n)] — SQL-recomputable down to the Adler-32. Every
-    stream provably holds all three DEFLATE block types (dynamic head,
-    stored sync-flush boundary, fixed tail), pinned corpus-wide in
-    tests. Same CPU-bound round-robin repartition rationale as the
-    other entropy rungs."""
-    from .inflate import zlib_multiblock_compress
-
-    encode = zlib_multiblock_compress
-
-    def op(batches):
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                if not b:
-                    # UNNEST(range(0, n_bytes)) oracles emit ZERO rows
-                    # for an empty payload while the decode side emits
-                    # one — enforce the non-empty corpus contract at
-                    # generation (ADVICE r10) so the asymmetry can
-                    # never reach the driver compare.
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                k = 6 + (b[0] % 5)
-                rows.append((doc_id, encode(b * k)))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_deflate_payload(docs: DataFrame) -> DataFrame:
-    """Inflate the real zlib blobs with the FROM-SPEC RFC 1951/1950
-    decoder (multimodal/inflate.py — canonical Huffman, all three
-    block types, LZ77 back-references, header + Adler-32 checks) and
-    report EXACT content sums over the decoded payload: byte_sum /
-    pos_weighted_sum cover every byte in order, adler32 is the
-    from-spec checksum the decoder verified against the stream
-    trailer, and has_all_btypes certifies the stream exercised the
-    stored+fixed+dynamic paths. A mispacked bit, a wrong extra-bits
-    table entry, or a bad back-reference is a driver-red hash
-    mismatch."""
-    from .inflate import adler32_spec, zlib_inflate
-
-    decode = zlib_inflate
-    adler = adler32_spec
+def audio_window_features(docs: DataFrame, window_bytes: int = 256) -> DataFrame:
+    """'Audio' feature extraction: per fixed-size byte window, mean and
+    peak amplitude (bytes stand in for PCM samples — swap the body for
+    a real codec read; the windowed-feature plumbing is the operator).
+    The mean is int_sum/window_bytes with a power-of-two denominator —
+    a dyadic rational, exactly representable in double, so NO rounding
+    (rounding would hit exact .5 midpoints where Python banker's-rounds
+    and DuckDB half-up-rounds differently)."""
 
     def op(batches):
         import numpy as np
@@ -1855,827 +699,271 @@ def decode_deflate_payload(docs: DataFrame) -> DataFrame:
         rows = []
         for pdf in batches:
             for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                payload, btypes = decode(bytes(blob))
-                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                pos = np.arange(arr.size, dtype=np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        arr.size,
-                        int(arr.sum()),
-                        int((pos * arr).sum()),
-                        adler(payload),
-                        set(btypes) == {0, 1, 2},
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "byte_sum",
-                    "pos_weighted_sum", "adler32", "has_all_btypes",
-                ],
-            )
-            rows = []
-
-    return with_deflate_blob(docs).mapInPandas(op, DEFLATE_DECODE_SCHEMA)
-
-
-FLAC_DECODE_SCHEMA = (
-    "doc_id long, sample_rate int, n_samples long, n_frames int, "
-    "sample_sum long, pos_weighted_sum long, md5_ok boolean"
-)
-
-
-def with_flac_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) with blob a REAL native-FLAC-subset stream
-    (multimodal/flac.py): sample_rate = 8000*(1 + first_byte % 3),
-    n_samples = 1024 + 256*(last_byte % 4) + 377 (a deliberate
-    non-multiple of the 1024 block so every stream has a short tail
-    frame), and sample i = (tri((i*s) mod 4096) - 1024)*8 +
-    byte[i mod n] % 16 - 8 with slope s = 16 + first_byte % 32 —
-    a smooth ramp the FIXED predictors squeeze plus a text-keyed
-    per-sample term that binds content, all SQL-recomputable. Same
-    CPU-bound round-robin repartition rationale as the other entropy
-    rungs."""
-    from .flac import flac_encode
-
-    encode = flac_encode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                sr = 8000 * (1 + b[0] % 3)
-                total = 1024 + 256 * (b[-1] % 4) + 377
-                s = 16 + (b[0] % 32)
-                i = np.arange(total, dtype=np.int64)
-                v = (i * s) % 4096
-                tri = np.where(v < 2048, v, 4095 - v)
-                txt = np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % n]
-                samples = (tri - 1024) * 8 + txt % 16 - 8
-                rows.append((doc_id, encode(sr, samples.tolist())))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_flac_meta(docs: DataFrame) -> DataFrame:
-    """Decode the real FLAC blobs with the from-spec decoder
-    (multimodal/flac.py — frame sync + CRC-8 + CRC-16 + STREAMINFO
-    MD5 all verified) and report EXACT content sums over the decoded
-    samples. FLAC is lossless, so unlike the ADPCM rung every column
-    is SQL-recomputable: a predictor slip, a Rice parameter misread,
-    or a mispacked warm-up sample is a driver-red hash mismatch."""
-    from .flac import flac_decode
-
-    decode = flac_decode
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                sr, n, nf, samples = decode(bytes(blob))
-                arr = np.asarray(samples, dtype=np.int64)
-                pos = np.arange(arr.size, dtype=np.int64)
-                rows.append(
-                    (
-                        doc_id, sr, n, nf,
-                        int(arr.sum()),
-                        int((pos * arr).sum()),
-                        True,  # decode() raised otherwise
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "n_frames",
-                    "sample_sum", "pos_weighted_sum", "md5_ok",
-                ],
-            )
-            rows = []
-
-    return with_flac_blob(docs).mapInPandas(op, FLAC_DECODE_SCHEMA)
-
-
-RC_DECODE_SCHEMA = (
-    "doc_id long, n_bytes long, byte_sum long, pos_weighted_sum long, "
-    "adler32 long, compressed boolean"
-)
-
-
-def with_rc_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, blob) with blob an RC01 adaptive-arithmetic frame
-    (multimodal/rangecoder.py) over payload = the doc's ASCII bytes
-    repeated twice — byte i is text[i mod n], SQL-recomputable down to
-    the Adler-32 trailer. English-like byte statistics compress well
-    under the adaptive bit-tree model (pinned corpus-wide via the
-    `compressed` column). Same CPU-bound round-robin repartition
-    rationale as the other entropy rungs."""
-    from .rangecoder import rc_encode
-
-    encode = rc_encode
-
-    def op(batches):
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                if not b:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                blob = encode(b * 2)
-                # The multimodal_arith_decode oracle hardcodes
-                # `compressed` TRUE — enforce it where the blob is
-                # MADE (ADVICE r10): a doc too short/high-entropy to
-                # beat 8 bits/byte under the fresh adaptive model
-                # must fail loudly here, not as an oracle mismatch.
-                if len(blob) - 12 >= 2 * len(b):
-                    raise ValueError(
-                        f"RC01 corpus contract violated (doc_id="
-                        f"{doc_id}): code {len(blob) - 12} B did not "
-                        f"compress payload {2 * len(b)} B"
-                    )
-                rows.append((doc_id, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, blob binary")
-
-
-def decode_rc_payload(docs: DataFrame) -> DataFrame:
-    """Decode the RC01 frames with the context-adaptive binary
-    arithmetic decoder (multimodal/rangecoder.py) and report EXACT
-    content sums over the decoded payload plus the from-spec Adler-32
-    the decoder verified against the frame trailer. `compressed`
-    certifies the adaptive model genuinely beat 8 bits/byte on the
-    corpus content (code bytes < payload bytes).
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + contract check + encode + the real adaptive decode
-    per document, so the blob never crosses an extra Arrow boundary.
-    Rows identical by construction; with_rc_blob stays as the
-    standalone blob maker."""
-    from .rangecoder import rc_decode, rc_encode
-    from .inflate import adler32_spec
-
-    encode = rc_encode
-    decode = rc_decode
-    adler = adler32_spec
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                if not b:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                blob = encode(b * 2)
-                if len(blob) - 12 >= 2 * len(b):
-                    raise ValueError(
-                        f"RC01 corpus contract violated (doc_id="
-                        f"{doc_id}): code {len(blob) - 12} B did not "
-                        f"compress payload {2 * len(b)} B"
-                    )
-                # The query's claim: the REAL adaptive decode.
-                payload = decode(blob)
-                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                pos = np.arange(arr.size, dtype=np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        arr.size,
-                        int(arr.sum()),
-                        int((pos * arr).sum()),
-                        adler(payload),
-                        len(blob) - 12 < arr.size,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_bytes", "byte_sum",
-                    "pos_weighted_sum", "adler32", "compressed",
-                ],
-            )
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, RC_DECODE_SCHEMA)
-
-
-MPEG_SCHEMA = (
-    "doc_id long, frame_idx int, frame_type string, width int, "
-    "height int, n_frames int, n_mb int, n_interior int, "
-    "mv_dx int, mv_dy int, within_tolerance boolean"
-)
-
-
-def with_mpeg_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a motion-compensated MPV1 stream
-    (multimodal/mpeg.py — intra DCT frame + P-frames with full-search
-    motion vectors and coded residuals). Content is a TRANSLATING
-    texture so the motion field is SQL-predictable: width =
-    32 + 16*(first_byte % 2), height = 32 + 16*(last_byte % 2),
-    n_frames = 3 + (first_byte + last_byte) % 2, per-frame shift
-    (sx, sy) = (1 + first_byte % 3, 1 + last_byte % 3), fps =
-    5 * (1 + byte_length % 4), base pixel p = (byte[p mod n]*131 +
-    p*7919) % 256, and frame f pixel (y, x) = base[(y + f*sy) mod h,
-    (x + f*sx) mod w]. Every INTERIOR macroblock of a P-frame (one
-    whose 16x16 window still fits after the shift: y0+16+sy <= h and
-    x0+16+sx <= w) is then an EXACT translation of the previous frame,
-    so its best motion vector is exactly (sy, sx) — enforced HERE at
-    generation (ADVICE r10 discipline: corpus contracts fail loudly at
-    the blob maker, not as driver-red oracle mismatches) along with
-    the MPEG_TOL reconstruction bound. ``text`` rides along for the
-    decode stage's source regeneration."""
-    from .mpeg import MB, MPEG_TOL, mpeg_encode_stats
-
-    encode = mpeg_encode_stats
-    mb = MB
-    tol = MPEG_TOL
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                w = 32 + 16 * int(bb[0] % 2)
-                h = 32 + 16 * int(bb[-1] % 2)
-                nf = 3 + int((bb[0] + bb[-1]) % 2)
-                sx = 1 + int(bb[0] % 3)
-                sy = 1 + int(bb[-1] % 3)
-                fps = 5 * (1 + n % 4)
-                p = np.arange(h * w, dtype=np.int64)
-                base = ((bb[p % n] * 131 + p * 7919) % 256).reshape(h, w)
-                frames = []
-                for f in range(nf):
-                    yy = (np.arange(h)[:, None] + f * sy) % h
-                    xx = (np.arange(w)[None, :] + f * sx) % w
-                    frames.append(base[yy, xx].astype(np.uint8).tobytes())
-                # Generation-time corpus contract from the ENCODER's
-                # closed-loop state (bit-identical to decode by
-                # construction — the query stage still does the real
-                # bitstream decode): (a) every interior P-frame
-                # macroblock carries the designed motion vector — in
-                # HALF-PEL units an exact translation must land on the
-                # EVEN vector (2*sy, 2*sx); a SAD tie, a search bug, or
-                # a half-pel refinement that wrongly "improves" on an
-                # exact match must fail HERE, loudly — (b)
-                # reconstruction within MPEG_TOL of the source.
-                blob, mvs, errs = encode(w, h, fps, frames)
-                for f in range(1, nf):
-                    k = 0
-                    for y0 in range(0, h, mb):
-                        for x0 in range(0, w, mb):
-                            if y0 + mb + sy <= h and x0 + mb + sx <= w:
-                                if mvs[f][k] != (2 * sy, 2 * sx):
-                                    raise ValueError(
-                                        "MPV1 corpus contract violated "
-                                        f"(doc_id={doc_id}, frame {f}, "
-                                        f"mb ({y0},{x0})): half-pel mv "
-                                        f"{mvs[f][k]} != designed "
-                                        f"({2 * sy}, {2 * sx})"
-                                    )
-                            k += 1
-                for f, err in enumerate(errs):
-                    if err > tol:
-                        raise ValueError(
-                            "MPV1 corpus contract violated (doc_id="
-                            f"{doc_id}, frame {f}): max abs err {err} "
-                            f"> MPEG_TOL {tol}"
-                        )
-                rows.append((doc_id, text, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-def decode_mpeg_frames(docs: DataFrame) -> DataFrame:
-    """Decode the MPV1 streams and emit one row per FRAME binding the
-    bitstream-decoded MOTION FIELD and geometry to SQL-exact values:
-    frame_type from the stream's frame headers, (mv_dy, mv_dx) = the
-    decoded vector of the frame's FIRST interior macroblock in
-    FULL-PEL units (the bitstream carries half-pel vectors; exact
-    translations are even, so the >>1 is lossless — 0 for the intra
-    frame), n_interior = the count of interior-position macroblocks
-    whose DECODED half-pel vector equals the doc's designed shift —
-    a misparsed Exp-Golomb bit, swapped components, wrong half-pel
-    scaling, or wrong macroblock order changes these columns and reds
-    the driver hash.
-    within_tolerance bounds the motion-compensated reconstruction
-    against the regenerated source (closed-loop: error must NOT
-    accumulate across P-frames).
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + contract checks + encode + the real bitstream decode
-    per document, so the (text, blob) pair never crosses the Arrow
-    boundary between two Python stages and the source plane is
-    generated once instead of twice. Rows identical by construction
-    (same generation, same encode, same decode, same comparisons);
-    with_mpeg_blob stays as the standalone blob maker."""
-    from .mpeg import MB, MPEG_TOL, mpeg_decode, mpeg_encode_stats
-
-    encode = mpeg_encode_stats
-    decode = mpeg_decode
-    mb = MB
-    tol = MPEG_TOL
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                w = 32 + 16 * int(bb[0] % 2)
-                h = 32 + 16 * int(bb[-1] % 2)
-                nf = 3 + int((bb[0] + bb[-1]) % 2)
-                sx = 1 + int(bb[0] % 3)
-                sy = 1 + int(bb[-1] % 3)
-                fps = 5 * (1 + n % 4)
-                p = np.arange(h * w, dtype=np.int64)
-                base = ((bb[p % n] * 131 + p * 7919) % 256).reshape(h, w)
-                frames = []
-                for f in range(nf):
-                    yy = (np.arange(h)[:, None] + f * sy) % h
-                    xx = (np.arange(w)[None, :] + f * sx) % w
-                    frames.append(base[yy, xx].astype(np.uint8).tobytes())
-                # Generation-time corpus contract from the ENCODER's
-                # closed-loop state (with_mpeg_blob's checks, verbatim).
-                blob, emvs, errs = encode(w, h, fps, frames)
-                for f in range(1, nf):
-                    k = 0
-                    for y0 in range(0, h, mb):
-                        for x0 in range(0, w, mb):
-                            if y0 + mb + sy <= h and x0 + mb + sx <= w:
-                                if emvs[f][k] != (2 * sy, 2 * sx):
-                                    raise ValueError(
-                                        "MPV1 corpus contract violated "
-                                        f"(doc_id={doc_id}, frame {f}, "
-                                        f"mb ({y0},{x0})): half-pel mv "
-                                        f"{emvs[f][k]} != designed "
-                                        f"({2 * sy}, {2 * sx})"
-                                    )
-                            k += 1
-                for f, err in enumerate(errs):
-                    if err > tol:
-                        raise ValueError(
-                            "MPV1 corpus contract violated (doc_id="
-                            f"{doc_id}, frame {f}): max abs err {err} "
-                            f"> MPEG_TOL {tol}"
-                        )
-                # The query's claim: the REAL bitstream decode.
-                w, h, fps, nf, out, mvs = decode(blob)
-                n_mb = (w // mb) * (h // mb)
-                for f in range(nf):
-                    yy = (np.arange(h)[:, None] + f * sy) % h
-                    xx = (np.arange(w)[None, :] + f * sx) % w
-                    src_f = base[yy, xx].astype(np.int64)
-                    got = np.frombuffer(out[f], dtype=np.uint8).astype(
-                        np.int64
-                    ).reshape(h, w)
-                    max_err = int(np.abs(got - src_f).max())
-                    if f == 0:
-                        ftype, mv_dx, mv_dy, n_int = "I", 0, 0, 0
-                    else:
-                        ftype = "P"
-                        mv_dx = mv_dy = 0
-                        n_int = 0
-                        first = True
-                        k = 0
-                        for y0 in range(0, h, mb):
-                            for x0 in range(0, w, mb):
-                                if y0 + mb + sy <= h and x0 + mb + sx <= w:
-                                    dy2, dx2 = mvs[f][k]
-                                    if first:
-                                        # full-pel view of the half-pel
-                                        # stream vector (floor — odd
-                                        # vectors would mismatch the
-                                        # oracle and red the driver)
-                                        mv_dy, mv_dx = dy2 >> 1, dx2 >> 1
-                                        first = False
-                                    if (dy2, dx2) == (2 * sy, 2 * sx):
-                                        n_int += 1
-                                k += 1
+                arr = np.frombuffer(blob, dtype=np.uint8)
+                for w in range(0, len(arr), window_bytes):
+                    chunk = arr[w : w + window_bytes]
                     rows.append(
                         (
-                            doc_id, f, ftype, w, h, nf, n_mb, n_int,
-                            mv_dx, mv_dy, bool(max_err <= tol),
+                            doc_id,
+                            w // window_bytes,
+                            int(chunk.sum()) / len(chunk),
+                            int(chunk.max()),
                         )
                     )
             yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "frame_type", "width",
-                    "height", "n_frames", "n_mb", "n_interior",
-                    "mv_dx", "mv_dy", "within_tolerance",
-                ],
+                rows, columns=["doc_id", "window_idx", "mean_amplitude", "peak_amplitude"]
             )
             rows = []
 
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, MPEG_SCHEMA)
+    return with_blob(docs).mapInPandas(op, AUDIO_SCHEMA)
 
 
-MAU_SCHEMA = (
-    "doc_id long, sample_rate int, n_samples long, n_frames int, "
-    "first_sample int, within_tolerance boolean"
-)
+def sample_frames(docs: DataFrame, stride: int = 1000) -> DataFrame:
+    """One row per sampled 'frame': ceil(n_bytes/stride) frames (min 1
+    for empty blobs) — the 1→N expansion shape of video frame
+    sampling. Ceil, not //+1: the latter emits a frame at
+    offset == n_bytes (past the end) whenever n_bytes is an exact
+    stride multiple."""
+
+    def op(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
+                n_frames = max(1, (len(blob) + stride - 1) // stride)
+                rows.extend((doc_id, idx, idx * stride) for idx in range(n_frames))
+            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_offset"])
+
+    return with_blob(docs).mapInPandas(op, FRAMES_SCHEMA)
+
+
+# ---------------------------------------------------------------------------
+# Signal generators: text bytes -> (encoder args, src), with src what
+# the contract and summary compare the decode against. Every rule is
+# SQL-recomputable from ascii(substr(text, ...)); queries.py's oracles
+# restate them.
+
+
+def _png_small(b):
+    """PNG trilogy: width/height from the first/last byte (1..8 each),
+    truecolor iff the byte length is even, pixels cycle the text."""
+    w = 1 + (b[0] % 8) if b else 1
+    h = 1 + (b[-1] % 8) if b else 1
+    ch = 3 if len(b) % 2 == 0 else 1
+    need = w * h * ch
+    px = (b * (need // max(1, len(b)) + 1))[:need] if b else b"\x00" * need
+    return (w, h, ch, px), None
+
+
+def _ladder_geom(b, span=17):
+    """Ladder geometry: 16 + first_byte % span by 16 + last_byte % span."""
+    return (16 + b[0] % span, 16 + b[-1] % span) if b else (16, 16)
+
+
+def _ramp(b, m, step, mul):
+    """byte[i mod n] + (i // step) * mul for i < m as int64 (byte term 0
+    for empty text): the ladder's pixel family before the mod 256."""
+    i = np.arange(m, dtype=np.int64)
+    src = (
+        np.frombuffer(b, dtype=np.uint8).astype(np.int64)[i % len(b)]
+        if b
+        else np.zeros(m, dtype=np.int64)
+    )
+    return src + (i // step) * mul
+
+
+def _png_ladder(step, mul):
+    """Truecolor ladder PNG, pixel i = ramp(step, mul) mod 256, stored
+    Up-filtered (filter 2, per pass for Adam7) before deflate."""
+
+    def gen(b):
+        w, h = _ladder_geom(b)
+        px = (_ramp(b, w * h * 3, step, mul) % 256).astype(np.uint8).tobytes()
+        return (w, h, 3, px, 2), None
+
+    return gen
+
+
+def _jpeg_gen(b):
+    """Ladder JPEG, pixel i = (byte[i mod n] + (i // 3) * 7) mod 256;
+    src = the expected pixels the lossy decode is bounded against."""
+    w, h = _ladder_geom(b)
+    expected = _ramp(b, w * h * 3, 3, 7) % 256
+    return (w, h, expected.astype(np.uint8).tobytes()), expected
+
+
+def _wav_gen(b):
+    """PCM WAV: rate = 8000 * (1 + first_byte % 3), stereo iff the byte
+    length is odd, n_frames = 1 + last_byte % 32, sample k =
+    ((byte[k mod n] * 131 + k * 7919) mod 65536) - 32768."""
+    n = len(b)
+    rate = 8000 * (1 + (b[0] % 3)) if n else 8000
+    channels = 1 + n % 2
+    n_frames = 1 + (b[-1] % 32) if n else 1
+    m = n_frames * channels
+    idx = np.arange(m, dtype=np.int64)
+    t = (
+        np.frombuffer(b, dtype=np.uint8)[idx % n].astype(np.int64)
+        if n
+        else np.zeros(m, dtype=np.int64)
+    )
+    v = (t * 131 + idx * 7919) % 65536 - 32768
+    return (rate, channels, v.astype("<i2").tobytes()), None
+
+
+def _avi_gen(b):
+    """Raw AVI: width/height = 1 + first/last byte % 8, fps = 5 * (1 +
+    byte_length % 5), n_frames = 1 + (first + last byte) % 6, byte k
+    of frame f = (byte[(f*31 + k) mod n] + f*17) mod 256."""
+    n = len(b)
+    w = 1 + (b[0] % 8) if n else 1
+    h = 1 + (b[-1] % 8) if n else 1
+    fps = 5 * (1 + n % 5)
+    nf = 1 + ((b[0] + b[-1]) % 6) if n else 1
+    sz = w * h * 3
+    src = np.frombuffer(b, dtype=np.uint8).astype(np.int64) if n else None
+    frames = []
+    for f in range(nf):
+        k = np.arange(sz, dtype=np.int64)
+        t = src[(f * 31 + k) % n] if n else np.zeros(sz, dtype=np.int64)
+        frames.append(((t + f * 17) % 256).astype(np.uint8).tobytes())
+    return (w, h, fps, frames), None
+
+
+def _gif_gen(b):
+    """Ladder GIF, index i = (byte[(i//5) mod n] + i//64) % 256 — the
+    runs of 5 make LZW genuinely compress."""
+    w, h = _ladder_geom(b)
+    i = np.arange(w * h, dtype=np.int64)
+    src = (
+        np.frombuffer(b, dtype=np.uint8).astype(np.int64)[(i // 5) % len(b)]
+        if b
+        else np.zeros(w * h, dtype=np.int64)
+    )
+    return (w, h, ((src + i // 64) % 256).astype(np.uint8).tobytes()), None
+
+
+def _adpcm_gen(b):
+    """IMA-ADPCM: a smooth varying-slope triangle the 4-bit codes track
+    — A_k = cumsum(1 + byte[k mod n] % 13), tri = A_k mod 4096
+    reflected, sample_k = (tri - 1024) * 8; rate = 8000 * (1 +
+    first_byte % 3), n_samples = (1 + last_byte % 4) * 505 (whole
+    blocks). The block header stores the first sample EXACTLY."""
+    n = len(b)
+    rate = 8000 * (1 + (b[0] % 3)) if n else 8000
+    m = (1 + (b[-1] % 4) if n else 1) * SAMPLES_PER_BLOCK
+    k = np.arange(m, dtype=np.int64)
+    d = (
+        1 + np.frombuffer(b, dtype=np.uint8).astype(np.int64)[k % n] % 13
+        if n
+        else np.ones(m, dtype=np.int64)
+    )
+    v = np.cumsum(d) % 4096
+    s = ((np.where(v < 2048, v, 4095 - v) - 1024) * 8).astype(np.int64)
+    return (rate, s), s
+
+
+def _mjpeg_gen(b):
+    """MJPEG AVI: width/height = 16 + first/last byte % 5, fps = 5 *
+    (1 + byte_length % 4), n_frames = 2 + (first + last byte) % 3,
+    frame f = the JPEG pixel family + f*11 (mod 256), so frame ORDER
+    is checkable; src = the unshifted base."""
+    n = len(b)
+    w, h = _ladder_geom(b, 5)
+    nf = 2 + ((b[0] + b[-1]) % 3) if n else 2
+    base = _ramp(b, w * h * 3, 3, 7)
+    frames = [((base + f * 11) % 256).astype(np.uint8).tobytes() for f in range(nf)]
+    return (w, h, 5 * (1 + n % 4), frames), base
+
+
+def _mjpeg_encode(width, height, fps, frames):
+    """Every RGB frame through the baseline JPEG encoder, then muxed."""
+    jpegs = [jpeg_encode(width, height, f) for f in frames]
+    return mjpeg_avi_encode(width, height, fps, jpegs)
+
+
+def _deflate_gen(b):
+    """zlib payload = the text repeated 6 + first_byte % 5 times."""
+    return (b * (6 + b[0] % 5),), None
+
+
+def _rc_gen(b):
+    """RC01 payload = the text twice (src: for the contract)."""
+    return (b * 2,), b * 2
+
+
+def _tri_text(bb, n, total, s):
+    """sample i = (tri((i*s) mod 4096) - 1024)*8 + byte[i mod n] % 16 - 8:
+    a smooth ramp (predictor / low-MDCT-band friendly) plus a
+    text-keyed broadband term that binds content."""
+    i = np.arange(total, dtype=np.int64)
+    v = (i * s) % 4096
+    return (np.where(v < 2048, v, 4095 - v) - 1024) * 8 + bb[i % n] % 16 - 8
+
+
+def _flac_gen(b):
+    """FLAC: rate = 8000*(1 + first_byte % 3), n_samples = 1024 +
+    256*(last_byte % 4) + 377 (always a short tail frame), slope 16 +
+    first_byte % 32."""
+    bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    samples = _tri_text(bb, len(b), 1024 + 256 * (b[-1] % 4) + 377, 16 + b[0] % 32)
+    return (8000 * (1 + b[0] % 3), samples.tolist()), None
 
 
 def _mau_samples(bb, n):
-    """The MAU1 corpus signal family (SQL-recomputable): sample i =
-    (tri((i*s) mod 4096) - 1024)*8 + byte[i mod n] % 16 - 8 with slope
-    s = 12 + first_byte % 24 — a smooth ramp (energy in the low MDCT
-    bands, where the static allocation spends its bits) plus a
-    text-keyed broadband term that binds content."""
-    import numpy as np
-
+    """The MAU1/MAU2 signal: n_samples = 1024 + 128*(last_byte % 4) +
+    193 (never a multiple of the 128-sample hop), slope 12 +
+    first_byte % 24."""
     total = 1024 + 128 * int(bb[-1] % 4) + 193
-    s = 12 + int(bb[0] % 24)
-    i = np.arange(total, dtype=np.int64)
-    v = (i * s) % 4096
-    tri = np.where(v < 2048, v, 4095 - v)
-    txt = bb[i % n]
-    return (tri - 1024) * 8 + txt % 16 - 8
+    return _tri_text(bb, n, total, 12 + int(bb[0] % 24))
 
 
-def with_mau_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a MAU1 perceptual-audio stream
-    (multimodal/mdct.py — MDCT + per-band scalefactor quantization,
-    MPEG-1-Layer-I-style): sample_rate = 8000*(1 + first_byte % 3),
-    n_samples = 1024 + 128*(last_byte % 4) + 193 (never a multiple of
-    the 128-sample hop, so every stream has a partial tail frame).
-    The MAU_TOL reconstruction bound is enforced HERE at generation
-    (ADVICE r10 discipline: the oracle hardcodes within_tolerance
-    TRUE, so the corpus contract must fail loudly at the blob maker,
-    not as a driver-red mismatch)."""
-    from .mdct import MAU_TOL, mau_decode, mau_encode
-
-    encode = mau_encode
-    decode = mau_decode
-    tol = MAU_TOL
-    gen = _mau_samples
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                sr = 8000 * (1 + int(bb[0] % 3))
-                samples = gen(bb, n)
-                blob = encode(sr, samples.tolist())
-                _, _, _, _, out = decode(blob)
-                err = int(np.abs(np.asarray(out) - samples).max())
-                if err > tol:
-                    raise ValueError(
-                        "MAU1 corpus contract violated (doc_id="
-                        f"{doc_id}): max abs err {err} > MAU_TOL {tol}"
-                    )
-                rows.append((doc_id, text, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
+def _mau_gen(b):
+    """MAU1/MAU2: rate = 8000*(1 + first_byte % 3); src = the samples."""
+    bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    samples = _mau_samples(bb, len(b))
+    return (8000 * (1 + int(bb[0] % 3)), samples.tolist()), samples
 
 
-def decode_mau_meta(docs: DataFrame) -> DataFrame:
-    """Decode the MAU1 streams: geometry + the raw header first sample
-    are exact decode outputs (a desynced scalefactor table or bit
-    layout breaks them), within_tolerance re-bounds the lossy MDCT
-    reconstruction against the regenerated source.
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + encode + ONE decode per document. The two-stage form
-    decoded every stream twice (once for the generation contract, once
-    here) and shipped (text, blob) across an extra Arrow boundary; the
-    single decode serves both the contract check (raise on breach, as
-    the blob maker did) and the emitted bound — same samples, same
-    comparison, identical rows. with_mau_blob stays as the standalone
-    blob maker."""
-    from .mdct import MAU_TOL, mau_decode, mau_encode
-
-    encode = mau_encode
-    decode = mau_decode
-    tol = MAU_TOL
-    gen = _mau_samples
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                samples = gen(bb, n)
-                blob = encode(8000 * (1 + int(bb[0] % 3)), samples.tolist())
-                sr, n_samples, nf, first, out = decode(blob)
-                err = int(np.abs(np.asarray(out) - samples).max())
-                if err > tol:
-                    raise ValueError(
-                        "MAU1 corpus contract violated (doc_id="
-                        f"{doc_id}): max abs err {err} > MAU_TOL {tol}"
-                    )
-                rows.append(
-                    (doc_id, sr, n_samples, nf, first, bool(err <= tol))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "n_frames",
-                    "first_sample", "within_tolerance",
-                ],
-            )
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, MAU_SCHEMA)
+def _mpeg_gen(b):
+    """MPV1: a TRANSLATING texture, so the motion field is SQL-exact —
+    width/height = 32 + 16*(first/last byte % 2), n_frames = 3 +
+    (first + last byte) % 2, shift (sx, sy) = (1 + first_byte % 3, 1 +
+    last_byte % 3), fps = 5 * (1 + byte_length % 4), base pixel p =
+    (byte[p mod n]*131 + p*7919) % 256, frame f = base shifted by
+    f*(sy, sx)."""
+    n = len(b)
+    bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    w = 32 + 16 * int(bb[0] % 2)
+    h = 32 + 16 * int(bb[-1] % 2)
+    nf = 3 + int((bb[0] + bb[-1]) % 2)
+    sx = 1 + int(bb[0] % 3)
+    sy = 1 + int(bb[-1] % 3)
+    p = np.arange(h * w, dtype=np.int64)
+    base = ((bb[p % n] * 131 + p * 7919) % 256).reshape(h, w)
+    frames = [
+        _mpeg_frame(base, f, sx, sy).astype(np.uint8).tobytes() for f in range(nf)
+    ]
+    return (w, h, 5 * (1 + n % 4), frames), (base, sx, sy)
 
 
-MAU2_SCHEMA = (
-    "doc_id long, sample_rate int, n_samples long, n_frames int, "
-    "first_sample int, within_tolerance boolean, snr_ok boolean"
-)
+def _mpeg_frame(base, f, sx, sy):
+    h, w = base.shape
+    yy = (np.arange(h)[:, None] + f * sy) % h
+    return base[yy, (np.arange(w)[None, :] + f * sx) % w]
 
 
-def with_mau2_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob a MAU2 stream — the MAU1 family
-    with DYNAMIC psychoacoustic bit allocation (multimodal/mdct.py:
-    spreading-function masking thresholds -> greedy NMR-priority
-    allocation under a 1024-bit/frame budget, 11% below MAU1's static
-    spend). Same SQL-exact signal family as MAU1. Both contract bounds
-    (MAU2_TOL absolute cap, MAU2_SNR_FLOOR_DB noise-energy floor) are
-    enforced HERE at generation (ADVICE r10 discipline)."""
-    from .mdct import MAU2_SNR_FLOOR_DB, MAU2_TOL, mau2_decode, mau2_encode
-
-    encode = mau2_encode
-    decode = mau2_decode
-    tol = MAU2_TOL
-    floor_db = MAU2_SNR_FLOOR_DB
-    gen = _mau_samples
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                sr = 8000 * (1 + int(bb[0] % 3))
-                samples = gen(bb, n)
-                blob = encode(sr, samples.tolist())
-                _, _, _, _, out = decode(blob)
-                noise = np.asarray(out, dtype=np.float64) - samples
-                err = int(np.abs(noise).max())
-                sig = float((samples.astype(np.float64) ** 2).sum())
-                snr = 10.0 * np.log10(
-                    sig / max(float((noise**2).sum()), 1e-12)
-                )
-                if err > tol or snr < floor_db:
-                    raise ValueError(
-                        "MAU2 corpus contract violated (doc_id="
-                        f"{doc_id}): err {err} (tol {tol}), snr "
-                        f"{snr:.1f} dB (floor {floor_db})"
-                    )
-                rows.append((doc_id, text, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-def decode_mau2_meta(docs: DataFrame) -> DataFrame:
-    """Decode the MAU2 streams: exact geometry + header first sample,
-    plus the two-sided lossy contract (absolute cap AND an SNR floor —
-    a perceptual allocator controls noise ENERGY, not peak error).
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + encode + ONE decode per document (the two-stage form
-    decoded every stream twice and shipped (text, blob) across an
-    extra Arrow boundary). The single decode serves both the
-    generation contract (raise on breach, as the blob maker did) and
-    the emitted bounds — the stage-2 `expected` was the same
-    regenerated signal as stage-1's `samples`, so the comparisons and
-    rows are identical. with_mau2_blob stays as the standalone blob
-    maker."""
-    from .mdct import MAU2_SNR_FLOOR_DB, MAU2_TOL, mau2_decode, mau2_encode
-
-    encode = mau2_encode
-    decode = mau2_decode
-    tol = MAU2_TOL
-    floor_db = MAU2_SNR_FLOOR_DB
-    gen = _mau_samples
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                samples = gen(bb, n)
-                blob = encode(8000 * (1 + int(bb[0] % 3)), samples.tolist())
-                sr, n_samples, nf, first, out = decode(blob)
-                expected = samples.astype(np.float64)
-                noise = np.asarray(out, dtype=np.float64) - expected
-                err = int(np.abs(noise).max())
-                sig = float((expected**2).sum())
-                snr = 10.0 * np.log10(
-                    sig / max(float((noise**2).sum()), 1e-12)
-                )
-                if err > tol or snr < floor_db:
-                    raise ValueError(
-                        "MAU2 corpus contract violated (doc_id="
-                        f"{doc_id}): err {err} (tol {tol}), snr "
-                        f"{snr:.1f} dB (floor {floor_db})"
-                    )
-                rows.append(
-                    (
-                        doc_id, sr, n_samples, nf, first,
-                        bool(err <= tol), bool(snr >= floor_db),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "n_frames",
-                    "first_sample", "within_tolerance", "snr_ok",
-                ],
-            )
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, MAU2_SCHEMA)
-
-
-AVC_SCHEMA = (
-    "doc_id long, width int, height int, qp int, n_blocks int, "
-    "n_mode0 int, n_mode1 int, n_mode2 int, pixel_sum long, "
-    "recon_exact boolean, within_tolerance boolean"
-)
+def _mpeg_interior(h, w, sx, sy):
+    """(k, y0, x0) of the INTERIOR macroblocks in raster order: those
+    whose 16x16 window still fits after the shift, so they are EXACT
+    translations whose best half-pel vector is (2*sy, 2*sx)."""
+    grid = [(y0, x0) for y0 in range(0, h, MB) for x0 in range(0, w, MB)]
+    return [
+        (k, y0, x0)
+        for k, (y0, x0) in enumerate(grid)
+        if y0 + MB + sy <= h and x0 + MB + sx <= w
+    ]
 
 
 def _avc_stripe_plane(bb, n, width: int, height: int):
@@ -2689,8 +977,6 @@ def _avc_stripe_plane(bb, n, width: int, height: int):
     (HOR), and every block below row 0 sees an EXACT vertical
     predictor (SAD 0 -> VERT, the lowest index). pixel_sum is then
     height * 4 * sum(v)."""
-    import numpy as np
-
     nbx = width // 4
     bx = np.arange(nbx, dtype=np.int64)
     v = (bb[bx % n] * 131 + bx * 7919) % 256
@@ -2699,405 +985,513 @@ def _avc_stripe_plane(bb, n, width: int, height: int):
     ), v
 
 
-def with_avc_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob an AVC1 intra stream
-    (multimodal/avc.py — H.264-style Intra_4x4 prediction + exact
-    integer transform/quant LUTs). Geometry/qp from the text bytes:
-    width = 32 + 16*(first_byte % 2), height = 32 + 16*(last_byte %
-    2), qp = (first_byte*7 + last_byte) % 12 — qp spans BOTH qP//6
-    shift banks and every qP%6 table column across the corpus. The
-    designed mode field (DC once, HOR across block-row 0, VERT
-    everywhere below) and the EXACT reconstruction are enforced HERE
-    at generation from the encoder's closed-loop stats (ADVICE r10
-    discipline: corpus drift fails loudly at the blob maker, not as a
-    driver-red oracle mismatch)."""
-    from .avc import DC, HOR, VERT, avc_encode_stats
+def _avc_gen(b):
+    """AVC1/AVCC: width/height = 32 + 16*(first/last byte % 2), qp =
+    (first_byte*7 + last_byte) % 12 — both qP//6 shift banks and every
+    qP%6 table column across the corpus."""
+    bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    width = 32 + 16 * int(bb[0] % 2)
+    height = 32 + 16 * int(bb[-1] % 2)
+    qp = (int(bb[0]) * 7 + int(bb[-1])) % 12
+    img, v = _avc_stripe_plane(bb, len(b), width, height)
+    return (width, height, qp, img.tobytes()), (img, v, qp)
 
-    encode = avc_encode_stats
-    dc, hor, vert = DC, HOR, VERT
-    gen = _avc_stripe_plane
 
-    def op(batches):
-        import numpy as np
-        import pandas as pd
+# ---------------------------------------------------------------------------
+# Generation-time corpus contracts, contract(doc_id, src, enc, decoded)
+# with enc the encoder's return value (ADVICE r10): the oracles hardcode
+# the designed values (within_tolerance / `compressed` TRUE, the
+# designed motion and mode fields), so a doc that breaks the design
+# fails loudly here, never as a silent oracle mismatch.
 
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                width = 32 + 16 * int(bb[0] % 2)
-                height = 32 + 16 * int(bb[-1] % 2)
-                qp = (int(bb[0]) * 7 + int(bb[-1])) % 12
-                img, _ = gen(bb, n, width, height)
-                blob, modes, recon = encode(
-                    width, height, qp, img.tobytes()
+
+def _rc_contract(doc_id, payload, blob, _out):
+    # Too short/high-entropy to beat 8 bits/byte under the fresh model.
+    if len(blob) - 12 >= len(payload):
+        raise ValueError(
+            f"RC01 corpus contract violated (doc_id={doc_id}): code "
+            f"{len(blob) - 12} B did not compress payload {len(payload)} B"
+        )
+
+
+def _mpeg_contract(doc_id, src, enc, _out):
+    # From the ENCODER's closed-loop state: every interior P-frame
+    # macroblock carries the designed EVEN half-pel vector (a SAD tie, a
+    # search bug or a half-pel "improvement" on an exact match fails
+    # here), and reconstruction stays within MPEG_TOL.
+    base, sx, sy = src
+    _, mvs, errs = enc
+    interior = _mpeg_interior(*base.shape, sx, sy)
+    for f in range(1, len(mvs)):
+        for k, y0, x0 in interior:
+            if mvs[f][k] != (2 * sy, 2 * sx):
+                raise ValueError(
+                    f"MPV1 corpus contract violated (doc_id={doc_id}, frame {f}, "
+                    f"mb ({y0},{x0})): half-pel mv {mvs[f][k]} != designed "
+                    f"({2 * sy}, {2 * sx})"
                 )
-                designed = (
-                    modes[0, 0] == dc
-                    and (modes[0, 1:] == hor).all()
-                    and (modes[1:, :] == vert).all()
-                )
-                if not designed:
-                    raise ValueError(
-                        "AVC1 corpus contract violated (doc_id="
-                        f"{doc_id}): mode field departs from the "
-                        "designed DC/HOR/VERT layout"
-                    )
-                if not (recon == img).all():
-                    raise ValueError(
-                        "AVC1 corpus contract violated (doc_id="
-                        f"{doc_id}): stripe reconstruction not exact "
-                        f"at qp={qp}"
-                    )
-                rows.append((doc_id, text, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-def decode_avc_intra(docs: DataFrame) -> DataFrame:
-    """Decode the AVC1 streams and bind the bitstream-decoded MODE
-    FIELD and pixel content to SQL-exact values: n_mode0/1/2 count the
-    decoded Intra_4x4 modes (a misparsed mode bit, wrong MPM
-    prediction chain, or wrong block raster order changes the counts
-    and reds the driver hash), pixel_sum sums the decoded plane (the
-    designed corpus reconstructs EXACTLY, so the oracle recomputes it
-    from the generation rule), recon_exact pins that bit-exactness
-    and within_tolerance re-states the general AVC_TOL envelope.
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + contract checks + encode + the real bitstream decode
-    per document (the stripe plane is generated once, and (text, blob)
-    never crosses an extra Arrow boundary). Rows identical by
-    construction; with_avc_blob stays as the standalone blob maker.
-    The streaming twin (stream_avc_ingest) consumes this same fused
-    operator."""
-    from .avc import AVC_TOL, DC, HOR, VERT, avc_decode, avc_encode_stats
-
-    encode = avc_encode_stats
-    decode = avc_decode
-    dc, hor, vert = DC, HOR, VERT
-    tol = AVC_TOL
-    gen = _avc_stripe_plane
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                width = 32 + 16 * int(bb[0] % 2)
-                height = 32 + 16 * int(bb[-1] % 2)
-                qp = (int(bb[0]) * 7 + int(bb[-1])) % 12
-                img, _ = gen(bb, n, width, height)
-                blob, emodes, erecon = encode(
-                    width, height, qp, img.tobytes()
-                )
-                designed = (
-                    emodes[0, 0] == dc
-                    and (emodes[0, 1:] == hor).all()
-                    and (emodes[1:, :] == vert).all()
-                )
-                if not designed:
-                    raise ValueError(
-                        "AVC1 corpus contract violated (doc_id="
-                        f"{doc_id}): mode field departs from the "
-                        "designed DC/HOR/VERT layout"
-                    )
-                if not (erecon == img).all():
-                    raise ValueError(
-                        "AVC1 corpus contract violated (doc_id="
-                        f"{doc_id}): stripe reconstruction not exact "
-                        f"at qp={qp}"
-                    )
-                # The query's claim: the REAL bitstream decode.
-                width, height, qp, recon, modes = decode(blob)
-                err = int(
-                    np.abs(
-                        recon.astype(np.int64) - img.astype(np.int64)
-                    ).max()
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        width,
-                        height,
-                        qp,
-                        int(modes.size),
-                        int((modes == vert).sum()),
-                        int((modes == hor).sum()),
-                        int((modes == dc).sum()),
-                        int(recon.astype(np.int64).sum()),
-                        bool(err == 0),
-                        bool(err <= tol),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "qp", "n_blocks",
-                    "n_mode0", "n_mode1", "n_mode2", "pixel_sum",
-                    "recon_exact", "within_tolerance",
-                ],
+    for f, err in enumerate(errs):
+        if err > MPEG_TOL:
+            raise ValueError(
+                f"MPV1 corpus contract violated (doc_id={doc_id}, frame {f}): "
+                f"max abs err {err} > MPEG_TOL {MPEG_TOL}"
             )
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, AVC_SCHEMA)
 
 
-AVCC_SCHEMA = (
-    "doc_id long, width int, height int, qp int, n_blocks int, "
-    "total_coeff_sum long, n_mode0 int, n_mode1 int, n_mode2 int, "
-    "pixel_sum long, recon_exact boolean, within_tolerance boolean"
+def _mau1_contract(doc_id, samples, _enc, out):
+    err = int(np.abs(np.asarray(out[4]) - samples).max())
+    if err > MAU_TOL:
+        raise ValueError(
+            f"MAU1 corpus contract violated (doc_id={doc_id}): "
+            f"max abs err {err} > MAU_TOL {MAU_TOL}"
+        )
+
+
+def _mau2_contract(doc_id, samples, _enc, out):
+    # A perceptual allocator controls noise ENERGY, not peak error: an
+    # absolute cap AND an SNR floor.
+    expected = samples.astype(np.float64)
+    noise = np.asarray(out[4], dtype=np.float64) - expected
+    err = int(np.abs(noise).max())
+    sig = float((expected**2).sum())
+    snr = 10.0 * np.log10(sig / max(float((noise**2).sum()), 1e-12))
+    if err > MAU2_TOL or snr < MAU2_SNR_FLOOR_DB:
+        raise ValueError(
+            f"MAU2 corpus contract violated (doc_id={doc_id}): err {err} "
+            f"(tol {MAU2_TOL}), snr {snr:.1f} dB (floor {MAU2_SNR_FLOOR_DB})"
+        )
+
+
+def _designed_modes(modes):
+    """The stripe corpus's forced mode field: DC once, HOR across
+    block-row 0, VERT everywhere below."""
+    return (
+        modes[0, 0] == DC
+        and (modes[0, 1:] == HOR).all()
+        and (modes[1:, :] == VERT).all()
+    )
+
+
+def _avc_contract(doc_id, src, enc, _out):
+    img, _, qp = src
+    _, modes, recon = enc
+    if not _designed_modes(modes):
+        raise ValueError(
+            f"AVC1 corpus contract violated (doc_id={doc_id}): "
+            "mode field departs from the designed DC/HOR/VERT layout"
+        )
+    if not (recon == img).all():
+        raise ValueError(
+            f"AVC1 corpus contract violated (doc_id={doc_id}): "
+            f"stripe reconstruction not exact at qp={qp}"
+        )
+
+
+# H.264 MF table, position class a, per qP % 6.
+_MF_A = (13107, 11916, 10082, 9362, 8192, 7282)
+
+
+def _avcc_contract(doc_id, src, enc, _out):
+    # Beyond the AVC1 field: constant residuals quantize to at most ONE
+    # DC coefficient, so only row-0 blocks carry coefficients, and
+    # whether a stripe does is closed-form from the MF table and the
+    # intra offset.
+    img, v, qp = src
+    _, modes, recon, tc = enc
+    if not (_designed_modes(modes) and (tc[1:, :] == 0).all()):
+        raise ValueError(
+            f"AVCC corpus contract violated (doc_id={doc_id}): "
+            "mode/TotalCoeff field departs from the designed layout"
+        )
+    if not (recon == img).all():
+        raise ValueError(
+            f"AVCC corpus contract violated (doc_id={doc_id}): "
+            f"stripe reconstruction not exact at qp={qp}"
+        )
+    qbits = 15 + qp // 6
+    r = np.empty(len(v), dtype=np.int64)
+    r[0] = v[0] - 128
+    r[1:] = v[1:] - v[:-1]
+    mag = (np.abs(16 * r) * _MF_A[qp % 6] + (1 << qbits) // 3) >> qbits
+    lv = np.sign(16 * r) * mag
+    if int((lv != 0).sum()) != int(tc.sum()):
+        raise ValueError(
+            f"AVCC corpus contract violated (doc_id={doc_id}): "
+            "TotalCoeff departs from the closed-form stripe prediction"
+        )
+
+
+# ---------------------------------------------------------------------------
+# Summaries, summarize(doc_id, src, decoded) -> rows: everything
+# reported is recovered from the decoded bytes; src only bounds a lossy
+# reconstruction. A column a contract certifies is emitted as TRUE.
+
+
+def _png_meta(doc_id, _src, out):
+    w, h, ch, px = out
+    return [(doc_id, w, h, ch, w * h, sum(px))]
+
+
+def _png_adam7_meta(doc_id, _src, out):
+    # pixel_sum is permutation-invariant; the position-weighted digest
+    # catches a pass scattered onto the wrong raster cells.
+    arr = np.frombuffer(out[3], dtype=np.uint8).astype(np.int64)
+    wsum = int(((np.arange(arr.size, dtype=np.int64) % ADAM7_W_MOD + 1) * arr).sum())
+    return [_png_meta(doc_id, _src, out)[0] + (wsum,)]
+
+
+def _ahash60(px: bytes) -> int:
+    """Average hash: bit i set iff px[i] * n >= sum(px) (the exact
+    integer mean compare, reproducible in SQL), first 60 bytes."""
+    n, s = len(px), sum(px)
+    return sum(1 << i for i in range(min(60, n)) if px[i] * n >= s)
+
+
+def _png_ahash(doc_id, _src, out):
+    w, h, ch, px = out
+    return [(doc_id, w, h, ch, _ahash60(px))]
+
+
+def _jpeg_rows(doc_id, expected, out):
+    w, h, ch, px = out
+    got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    err = int(np.abs(got - expected).max())
+    return [(doc_id, w, h, ch, w * h, bool(err <= JPEG_TOL))]
+
+
+def _wav_meta(doc_id, _src, out):
+    rate, channels, bits, n_frames, samples = out
+    ssum = int(samples.astype("int64").sum())
+    return [(doc_id, rate, channels, bits, n_frames, ssum)]
+
+
+def _wav_envelope(doc_id, _src, out):
+    # Per channel, frames group into blocks of 4 and each block reports
+    # its MAX (integer-exact in SQL, no division hazard).
+    rate, channels, _bits, n_frames, samples = out
+    frames = samples.astype(np.int64).reshape(n_frames, channels)
+    n_blocks = (n_frames + 3) // 4
+    pad = n_blocks * 4 - n_frames
+    if pad:
+        # -32768 is the int16 minimum: identity for MAX, and partial
+        # blocks always hold >=1 real frame.
+        frames = np.vstack([frames, np.full((pad, channels), -32768, np.int64)])
+    peaks = frames.reshape(n_blocks, 4, channels).max(axis=1)
+    return [(doc_id, rate, channels, n_blocks, int(peaks.sum()))]
+
+
+def _avi_meta(doc_id, _src, out):
+    w, h, fps, nf, frames = out
+    psum = sum(
+        int(np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum()) for f in frames
+    )
+    return [(doc_id, w, h, fps, nf, psum)]
+
+
+def _avi_motion(doc_id, _src, out):
+    # motion_sum = exact L1 delta between consecutive frames.
+    nf, frames = out[3], out[4]
+    stack = np.stack([np.frombuffer(f, np.uint8) for f in frames]).astype(np.int64)
+    motion = int(np.abs(stack[1:] - stack[:-1]).sum()) if nf > 1 else 0
+    return [(doc_id, nf, max(nf - 1, 0), motion)]
+
+
+def _avi_frame_ahash(doc_id, _src, out):
+    w, h, _fps, _nf, frames = out
+    return [(doc_id, fi, w, h, _ahash60(fb)) for fi, fb in enumerate(frames)]
+
+
+def _gif_meta(doc_id, _src, out):
+    # rgb_sum maps every index through the palette read from the file.
+    w, h, palette, indices = out
+    idx = np.frombuffer(indices, dtype=np.uint8).astype(np.int64)
+    pal = np.frombuffer(palette, dtype=np.uint8).reshape(256, 3).astype(np.int64)
+    pos = np.arange(idx.size, dtype=np.int64)
+    rgb = int(pal.sum(axis=1)[idx].sum())
+    return [(doc_id, w, h, idx.size, int(idx.sum()), int((pos * idx).sum()), rgb)]
+
+
+def _adpcm_rows(doc_id, expected, out):
+    rate, n_samples, n_blocks, dec = out
+    got = np.asarray(dec, dtype=np.int64)
+    ok = int(np.abs(got - expected).max()) <= ADPCM_TOL
+    return [(doc_id, rate, n_blocks, n_samples, int(got[0]), bool(ok))]
+
+
+def _mjpeg_frames(doc_id, base, out):
+    # One row per FRAME, each bounded against its own regenerated source.
+    w, h, fps, nf, frames = out
+    rows = []
+    for f, px in enumerate(frames):
+        got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        err = int(np.abs(got - (base + f * 11) % 256).max())
+        rows.append((doc_id, f, w, h, nf, fps, bool(err <= JPEG_TOL)))
+    return rows
+
+
+def _payload_sums(payload: bytes):
+    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+    pos = np.arange(arr.size, dtype=np.int64)
+    return arr.size, int(arr.sum()), int((pos * arr).sum()), adler32_spec(payload)
+
+
+def _deflate_payload(doc_id, _src, out):
+    payload, btypes = out
+    return [(doc_id, *_payload_sums(payload), set(btypes) == {0, 1, 2})]
+
+
+def _rc_payload(doc_id, _src, payload):
+    return [(doc_id, *_payload_sums(payload), True)]  # compressed: contract
+
+
+def _flac_meta(doc_id, _src, out):
+    sr, n, nf, samples = out
+    arr = np.asarray(samples, dtype=np.int64)
+    pos = np.arange(arr.size, dtype=np.int64)
+    # md5_ok: decode() verified the STREAMINFO MD5 (raised otherwise).
+    return [(doc_id, sr, n, nf, int(arr.sum()), int((pos * arr).sum()), True)]
+
+
+def _mpeg_frames(doc_id, src, out):
+    # (mv_dy, mv_dx) = the FIRST interior macroblock's decoded vector in
+    # full-pel units (floor of the half-pel vector; exact translations
+    # are even), n_interior = interior vectors equal to the designed
+    # shift, within_tolerance = the closed-loop reconstruction bound.
+    base, sx, sy = src
+    w, h, fps, nf, frames, mvs = out
+    interior = _mpeg_interior(h, w, sx, sy)
+    rows = []
+    for f in range(nf):
+        got = np.frombuffer(frames[f], dtype=np.uint8).astype(np.int64).reshape(h, w)
+        err = int(np.abs(got - _mpeg_frame(base, f, sx, sy)).max())
+        ftype, mv_dx, mv_dy, n_int = "I", 0, 0, 0
+        if f:
+            ftype = "P"
+            mv_dy, mv_dx = (d >> 1 for d in mvs[f][interior[0][0]])
+            n_int = sum(mvs[f][k] == (2 * sy, 2 * sx) for k, _, _ in interior)
+        n_mb = (w // MB) * (h // MB)
+        ok = bool(err <= MPEG_TOL)
+        rows.append((doc_id, f, ftype, w, h, nf, n_mb, n_int, mv_dx, mv_dy, ok))
+    return rows
+
+
+def _mau1_meta(doc_id, _src, out):
+    return [(doc_id, *out[:4], True)]  # within_tolerance: contract
+
+
+def _mau2_meta(doc_id, _src, out):
+    return [(doc_id, *out[:4], True, True)]  # within_tolerance, snr_ok: contract
+
+
+def _avc_stats(img, recon, modes):
+    """Mode counts (VERT, HOR, DC), pixel_sum, recon_exact and
+    within_tolerance of a decoded plane against the stripe source."""
+    err = int(np.abs(recon.astype(np.int64) - img.astype(np.int64)).max())
+    return (
+        int((modes == VERT).sum()),
+        int((modes == HOR).sum()),
+        int((modes == DC).sum()),
+        int(recon.astype(np.int64).sum()),
+        bool(err == 0),
+        bool(err <= AVC_TOL),
+    )
+
+
+def _avc_intra(doc_id, src, out):
+    width, height, qp, recon, modes = out
+    stats = _avc_stats(src[0], recon, modes)
+    return [(doc_id, width, height, qp, int(modes.size), *stats)]
+
+
+def _avc_cavlc(doc_id, src, out):
+    width, height, qp, recon, modes, tc = out
+    stats = _avc_stats(src[0], recon, modes)
+    return [(doc_id, width, height, qp, int(modes.size), int(tc.sum()), *stats)]
+
+
+# ---------------------------------------------------------------------------
+# The table, and the one operator that runs a rung.
+
+
+class Rung(NamedTuple):
+    """One codec-ladder rung: gen(text_bytes) -> (encoder args, src);
+    encode/decode are the codec's functions (a stats encoder returns
+    (blob, *closed-loop stats)); summarize(doc_id, src, decoded) ->
+    rows of `schema`. `repartition` takes the deliberate round-robin
+    repartition(defaultParallelism): a CPU-bound codec over a
+    single-file corpus would otherwise plan as ONE input partition and
+    serialize on one core (the header-light PNG/WAV/AVI trilogy stays
+    Exchange-free). `nonempty` rejects empty text (an oracle's
+    UNNEST(range(0, n)) emits no row for it); `contract(doc_id, src,
+    enc, decoded)` is the rung's extra generation-time contract."""
+
+    gen: Callable
+    encode: Callable
+    decode: Callable
+    summarize: Callable
+    schema: str
+    repartition: bool = False
+    nonempty: bool = False
+    contract: Callable | None = None
+
+
+_AVC_SCHEMA = "doc_id long, width int, height int, qp int, n_blocks int, "
+_AVC_MODES = (
+    "n_mode0 int, n_mode1 int, n_mode2 int, pixel_sum long, "
+    "recon_exact boolean, within_tolerance boolean"
 )
+_MAU_SCHEMA = (
+    "doc_id long, sample_rate int, n_samples long, n_frames int, "
+    "first_sample int, within_tolerance boolean"
+)
+_PAYLOAD_SCHEMA = "doc_id long, n_bytes long, byte_sum long, pos_weighted_sum long, "
+
+RUNGS = {
+    "png": Rung(_png_small, png_encode, png_decode, _png_meta, DECODE_SCHEMA),
+    "png_ahash": Rung(
+        _png_small, png_encode, png_decode, _png_ahash,
+        "doc_id long, width int, height int, channels int, ahash long",
+    ),
+    "png_filtered": Rung(
+        _png_ladder(7, 13), png_encode, png_decode, _png_meta, DECODE_SCHEMA,
+        repartition=True,
+    ),
+    "png_adam7": Rung(
+        _png_ladder(5, 11), png_encode_adam7, png_decode, _png_adam7_meta,
+        DECODE_SCHEMA + ", pos_weighted_sum long", repartition=True,
+    ),
+    "jpeg": Rung(
+        _jpeg_gen, jpeg_encode, jpeg_decode, _jpeg_rows,
+        "doc_id long, width int, height int, channels int, "
+        "n_pixels long, within_tolerance boolean",
+        repartition=True,
+    ),
+    "wav": Rung(
+        _wav_gen, wav_encode, wav_decode, _wav_meta,
+        "doc_id long, sample_rate int, channels int, bit_depth int, "
+        "n_frames long, sample_sum long",
+    ),
+    "wav_envelope": Rung(
+        _wav_gen, wav_encode, wav_decode, _wav_envelope,
+        "doc_id long, sample_rate int, channels int, n_blocks long, envelope_sum long",
+    ),
+    "avi": Rung(
+        _avi_gen, avi_encode, avi_decode, _avi_meta,
+        "doc_id long, width int, height int, fps int, n_frames long, pixel_sum long",
+    ),
+    "avi_motion": Rung(
+        _avi_gen, avi_encode, avi_decode, _avi_motion,
+        "doc_id long, n_frames long, n_transitions long, motion_sum long",
+    ),
+    "avi_frame_ahash": Rung(
+        _avi_gen, avi_encode, avi_decode, _avi_frame_ahash,
+        "doc_id long, frame_idx int, width int, height int, ahash long",
+    ),
+    "gif": Rung(
+        _gif_gen, gif_encode, gif_decode, _gif_meta,
+        "doc_id long, width int, height int, n_px long, "
+        "index_sum long, pos_weighted_sum long, rgb_sum long",
+        repartition=True,
+    ),
+    "adpcm": Rung(
+        _adpcm_gen, adpcm_wav_encode, adpcm_wav_decode, _adpcm_rows,
+        "doc_id long, sample_rate int, n_blocks int, n_samples long, "
+        "first_sample int, within_tolerance boolean",
+        repartition=True,
+    ),
+    "mjpeg": Rung(
+        _mjpeg_gen, _mjpeg_encode, mjpeg_avi_decode, _mjpeg_frames,
+        "doc_id long, frame_idx int, width int, height int, "
+        "n_frames int, fps int, within_tolerance boolean",
+        repartition=True,
+    ),
+    "deflate": Rung(
+        _deflate_gen, zlib_multiblock_compress, zlib_inflate, _deflate_payload,
+        _PAYLOAD_SCHEMA + "adler32 long, has_all_btypes boolean",
+        repartition=True, nonempty=True,
+    ),
+    "flac": Rung(
+        _flac_gen, flac_encode, flac_decode, _flac_meta,
+        "doc_id long, sample_rate int, n_samples long, n_frames int, "
+        "sample_sum long, pos_weighted_sum long, md5_ok boolean",
+        repartition=True, nonempty=True,
+    ),
+    "arith": Rung(
+        _rc_gen, rc_encode, rc_decode, _rc_payload,
+        _PAYLOAD_SCHEMA + "adler32 long, compressed boolean",
+        repartition=True, nonempty=True, contract=_rc_contract,
+    ),
+    "mpeg": Rung(
+        _mpeg_gen, mpeg_encode_stats, mpeg_decode, _mpeg_frames,
+        "doc_id long, frame_idx int, frame_type string, width int, "
+        "height int, n_frames int, n_mb int, n_interior int, "
+        "mv_dx int, mv_dy int, within_tolerance boolean",
+        repartition=True, nonempty=True, contract=_mpeg_contract,
+    ),
+    "mau1": Rung(
+        _mau_gen, mau_encode, mau_decode, _mau1_meta, _MAU_SCHEMA,
+        repartition=True, nonempty=True, contract=_mau1_contract,
+    ),
+    "mau2": Rung(
+        _mau_gen, mau2_encode, mau2_decode, _mau2_meta,
+        _MAU_SCHEMA + ", snr_ok boolean",
+        repartition=True, nonempty=True, contract=_mau2_contract,
+    ),
+    "avc": Rung(
+        _avc_gen, avc_encode_stats, avc_decode, _avc_intra, _AVC_SCHEMA + _AVC_MODES,
+        repartition=True, nonempty=True, contract=_avc_contract,
+    ),
+    "avcc": Rung(
+        _avc_gen, avcc_encode_stats, avcc_decode, _avc_cavlc,
+        _AVC_SCHEMA + "total_coeff_sum long, " + _AVC_MODES,
+        repartition=True, nonempty=True, contract=_avcc_contract,
+    ),
+}
 
 
-def with_avcc_blob(docs: DataFrame) -> DataFrame:
-    """(doc_id, text, blob) with blob an AVCC stream — the AVC intra
-    codec with CAVLC residual coding (multimodal/cavlc.py). Same
-    stripe corpus / geometry / qp rules as with_avc_blob, so the mode
-    field and exact reconstruction carry over; additionally the
-    per-block TotalCoeff field is enforced at generation against the
-    closed-form prediction (constant residuals quantize to at most
-    ONE DC coefficient, so row-0 blocks carry 0 or 1 coefficients and
-    every lower block carries 0 — the quantized level per stripe is
-    SQL-recomputable from the MF table and the intra offset)."""
-    from .avc import DC, HOR, VERT
-    from .cavlc import avcc_encode_stats
-
-    encode = avcc_encode_stats
-    dc, hor, vert = DC, HOR, VERT
-    gen = _avc_stripe_plane
-    mf_a = (13107, 11916, 10082, 9362, 8192, 7282)
+def run_rung(docs: DataFrame, rung: Rung) -> DataFrame:
+    """The rung's rows from (doc_id, text): select -> optional
+    round-robin repartition -> ONE mapInPandas running the shared
+    corpus checks, then gen -> encode -> decode -> contract ->
+    summarize per document. The blob never leaves the worker (the
+    fused-operator shape: the intermediate is never materialized)."""
+    gen, encode, decode, summarize, schema, repartition, nonempty, contract = rung
+    columns = [f.split()[0] for f in schema.split(",")]
 
     def op(batches):
-        import numpy as np
         import pandas as pd
 
-        rows = []
         for pdf in batches:
+            rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 b = text.encode("utf-8")
                 if len(b) != len(text):
+                    # The SQL oracles index text by CHARACTER
+                    # (ascii(substr)) while gen indexes UTF-8 BYTES —
+                    # identical only for ASCII. A non-ASCII doc must
+                    # raise loudly, never silently diverge from the
+                    # oracle (ADVICE r8; corpus ASCII-ness is also
+                    # pinned in tests/test_multimodal.py).
                     raise ValueError(
                         f"non-ASCII document text (doc_id={doc_id}): "
                         "byte-indexed blob generation requires the "
                         "ASCII corpus contract"
                     )
-                n = len(b)
-                if not n:
+                if nonempty and not b:
                     raise ValueError(
                         f"empty document text (doc_id={doc_id}): "
                         "byte-indexed blob generation requires a "
                         "non-empty corpus"
                     )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                width = 32 + 16 * int(bb[0] % 2)
-                height = 32 + 16 * int(bb[-1] % 2)
-                qp = (int(bb[0]) * 7 + int(bb[-1])) % 12
-                img, v = gen(bb, n, width, height)
-                blob, modes, recon, tc = encode(
-                    width, height, qp, img.tobytes()
-                )
-                designed = (
-                    modes[0, 0] == dc
-                    and (modes[0, 1:] == hor).all()
-                    and (modes[1:, :] == vert).all()
-                    and (tc[1:, :] == 0).all()
-                )
-                if not designed:
-                    raise ValueError(
-                        "AVCC corpus contract violated (doc_id="
-                        f"{doc_id}): mode/TotalCoeff field departs "
-                        "from the designed layout"
-                    )
-                if not (recon == img).all():
-                    raise ValueError(
-                        "AVCC corpus contract violated (doc_id="
-                        f"{doc_id}): stripe reconstruction not exact "
-                        f"at qp={qp}"
-                    )
-                qbits = 15 + qp // 6
-                f = (1 << qbits) // 3
-                mf = mf_a[qp % 6]
-                r = np.empty(len(v), dtype=np.int64)
-                r[0] = v[0] - 128
-                r[1:] = v[1:] - v[:-1]
-                lv = np.sign(16 * r) * (
-                    (np.abs(16 * r) * mf + f) >> qbits
-                )
-                if int((lv != 0).sum()) != int(tc.sum()):
-                    raise ValueError(
-                        "AVCC corpus contract violated (doc_id="
-                        f"{doc_id}): TotalCoeff departs from the "
-                        "closed-form stripe prediction"
-                    )
-                rows.append((doc_id, text, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "text", "blob"])
-            rows = []
+                args, src = gen(b)
+                enc = encode(*args)
+                out = decode(enc[0] if isinstance(enc, tuple) else enc)
+                if contract is not None:
+                    contract(doc_id, src, enc, out)
+                rows.extend(summarize(doc_id, src, out))
+            yield pd.DataFrame(rows, columns=columns)
 
     src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, "doc_id long, text string, blob binary")
-
-
-def decode_avc_cavlc(docs: DataFrame) -> DataFrame:
-    """Decode the AVCC streams: the bitstream-decoded per-block
-    TotalCoeff field (the CAVLC nC context chain), mode field and
-    pixel content all bind to SQL-exact values — a wrong coeff_token
-    context, a mis-adapted suffixLength, a bad run_before width or a
-    swapped trailing-one sign desyncs the stream and reds the
-    checksum or the counts.
-
-    r13 (guide §4): FUSED with the blob stage — one mapInPandas runs
-    generation + contract checks (incl. the closed-form TotalCoeff
-    prediction) + encode + the real bitstream decode per document.
-    Rows identical by construction; with_avcc_blob stays as the
-    standalone blob maker."""
-    from .avc import AVC_TOL, DC, HOR, VERT
-    from .cavlc import avcc_decode, avcc_encode_stats
-
-    encode = avcc_encode_stats
-    decode = avcc_decode
-    dc, hor, vert = DC, HOR, VERT
-    tol = AVC_TOL
-    gen = _avc_stripe_plane
-    mf_a = (13107, 11916, 10082, 9362, 8192, 7282)
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                if len(b) != len(text):
-                    raise ValueError(
-                        f"non-ASCII document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires the "
-                        "ASCII corpus contract"
-                    )
-                n = len(b)
-                if not n:
-                    raise ValueError(
-                        f"empty document text (doc_id={doc_id}): "
-                        "byte-indexed blob generation requires a "
-                        "non-empty corpus"
-                    )
-                bb = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                width = 32 + 16 * int(bb[0] % 2)
-                height = 32 + 16 * int(bb[-1] % 2)
-                qp = (int(bb[0]) * 7 + int(bb[-1])) % 12
-                img, v = gen(bb, n, width, height)
-                blob, emodes, erecon, etc = encode(
-                    width, height, qp, img.tobytes()
-                )
-                designed = (
-                    emodes[0, 0] == dc
-                    and (emodes[0, 1:] == hor).all()
-                    and (emodes[1:, :] == vert).all()
-                    and (etc[1:, :] == 0).all()
-                )
-                if not designed:
-                    raise ValueError(
-                        "AVCC corpus contract violated (doc_id="
-                        f"{doc_id}): mode/TotalCoeff field departs "
-                        "from the designed layout"
-                    )
-                if not (erecon == img).all():
-                    raise ValueError(
-                        "AVCC corpus contract violated (doc_id="
-                        f"{doc_id}): stripe reconstruction not exact "
-                        f"at qp={qp}"
-                    )
-                qbits = 15 + qp // 6
-                f = (1 << qbits) // 3
-                mf = mf_a[qp % 6]
-                r = np.empty(len(v), dtype=np.int64)
-                r[0] = v[0] - 128
-                r[1:] = v[1:] - v[:-1]
-                lv = np.sign(16 * r) * (
-                    (np.abs(16 * r) * mf + f) >> qbits
-                )
-                if int((lv != 0).sum()) != int(etc.sum()):
-                    raise ValueError(
-                        "AVCC corpus contract violated (doc_id="
-                        f"{doc_id}): TotalCoeff departs from the "
-                        "closed-form stripe prediction"
-                    )
-                # The query's claim: the REAL bitstream decode.
-                width, height, qp, recon, modes, tc = decode(blob)
-                err = int(
-                    np.abs(
-                        recon.astype(np.int64) - img.astype(np.int64)
-                    ).max()
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        width,
-                        height,
-                        qp,
-                        int(modes.size),
-                        int(tc.sum()),
-                        int((modes == vert).sum()),
-                        int((modes == hor).sum()),
-                        int((modes == dc).sum()),
-                        int(recon.astype(np.int64).sum()),
-                        bool(err == 0),
-                        bool(err <= tol),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "qp", "n_blocks",
-                    "total_coeff_sum", "n_mode0", "n_mode1", "n_mode2",
-                    "pixel_sum", "recon_exact", "within_tolerance",
-                ],
-            )
-            rows = []
-
-    src = docs.select("doc_id", "text")
-    spark = src.sparkSession
-    src = src.repartition(spark.sparkContext.defaultParallelism)
-    return src.mapInPandas(op, AVCC_SCHEMA)
+    if repartition:
+        src = src.repartition(src.sparkSession.sparkContext.defaultParallelism)
+    return src.mapInPandas(op, schema)

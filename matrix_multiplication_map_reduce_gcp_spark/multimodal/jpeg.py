@@ -36,8 +36,8 @@ import sys
 
 import numpy as np
 
-# Captured by mapInPandas closures (blobs.with_jpeg_blob /
-# decode_jpeg_roundtrip). Python workers do NOT have this package on
+# Captured by mapInPandas closures (the jpeg and mjpeg rungs of
+# blobs.RUNGS). Python workers do NOT have this package on
 # sys.path, so the codec must ship BY VALUE inside the pickled
 # closure instead of by module reference — same opt-in as blobs.py.
 from pyspark import cloudpickle

@@ -462,7 +462,7 @@ def mau2_decode(data: bytes):
         coded = np.nonzero(barr)[0]
         cw = np.repeat(barr[coded], BAND)
         vals = _unpack_codes(
-            body, cw, "truncated MAU1: bit stream underrun"
+            body, cw, "truncated MAU2: bit stream underrun"
         )
         tops = np.repeat((1 << (barr[coded] - 1)) - 1, BAND)
         cols = (coded[:, None] * BAND + np.arange(BAND)[None, :]).reshape(-1)

@@ -339,8 +339,8 @@ def _dequant_plane(qzz: list, h: int, w: int) -> np.ndarray:
 # Vectorized entropy-coding tables (r13): the dict-of-tuples Huffman
 # tables as flat numpy arrays, a bit_length LUT for the size category,
 # and the two special AC symbols.
-_DC_CODE_ARR = np.zeros(16, dtype=np.int64)
-_DC_LEN_ARR = np.zeros(16, dtype=np.int64)
+_DC_CODE_ARR = np.zeros(17, dtype=np.int64)  # every _BITLEN size, 0..16
+_DC_LEN_ARR = np.zeros(17, dtype=np.int64)
 for _s, (_c, _l) in _DC_CODES.items():
     _DC_CODE_ARR[_s], _DC_LEN_ARR[_s] = _c, _l
 _AC_CODE_ARR = np.zeros(256, dtype=np.int64)
@@ -380,6 +380,11 @@ def _entropy_symbols(qzz, pred: int):
     dc = zz[:, 0]
     diffs = dc - np.concatenate(([pred], dc[:-1]))
     dsz = _BITLEN[np.abs(diffs)]
+    dc_len = _DC_LEN_ARR[dsz]
+    if not dc_len.all():
+        # |DC diff| >= 2048 has no DC size category: raise as
+        # _code_block's table lookup does, never emit a zero-length code.
+        raise KeyError(int(dsz[np.argmin(dc_len)]))
     # AC nonzeros, block-major then position-major (np.nonzero order).
     mask = zz[:, 1:] != 0
     bi, pj = np.nonzero(mask)
@@ -419,7 +424,7 @@ def _entropy_symbols(qzz, pred: int):
     V = np.zeros(total, dtype=np.int64)
     W = np.zeros(total, dtype=np.int64)
     V[block_base] = _DC_CODE_ARR[dsz]
-    W[block_base] = _DC_LEN_ARR[dsz]
+    W[block_base] = dc_len
     V[block_base + 1] = np.where(diffs > 0, diffs, diffs + (1 << dsz) - 1)
     W[block_base + 1] = dsz
     if nz:

@@ -1,9 +1,11 @@
-"""Registry entries for the multimodal plumbing. The image path is a
-REAL PNG round-trip (blobs.py encodes standards-compliant PNGs and
-decodes them back chunk-by-chunk); the oracle predicts the decoded
-metadata from the generation rule over the text bytes, so a decoder
-that misreports anything — dimensions, channels, pixel content —
-hash-fails the gate."""
+"""Registry entries for the multimodal plumbing. Every codec query runs
+one rung of blobs.RUNGS through blobs.run_rung — ONE fused
+mapInPandas that generates a REAL media file from each document's
+text, encodes it, decodes it back from the bytes alone and summarizes
+the decode; the oracle predicts the decoded metadata from the
+generation rule over the text bytes, so a decoder that misreports
+anything — dimensions, channels, pixel content — hash-fails the
+gate."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .blobs import decode_image_meta, sample_frames
+from .blobs import RUNGS, audio_window_features, run_rung, sample_frames
 from .jpeg import JPEG_TOL  # noqa: F401 — resolved in docstrings
 
 
@@ -49,7 +51,7 @@ def multimodal_image_meta(spark, sf_dir):
     (ASCII corpus, so byte k of the text is ascii(substr(text, k+1)));
     pixel_sum covers the decoded CONTENT, not just the header."""
     d = load_table(spark, sf_dir, "documents")
-    out = decode_image_meta(d)
+    out = run_rung(d, RUNGS["png"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),
@@ -92,13 +94,11 @@ def multimodal_image_decode_filtered(spark, sf_dir):
     scanline (png_decode now de-filters all five spec types) before
     its reported pixel_sum can match the oracle's per-pixel recompute
     — a filter-ignoring reader fails the content hash outright. Same
-    Arrow-batched two-stage mapInPandas plumbing (map-only plan) as
+    Arrow-batched fused mapInPandas plumbing (map-only plan) as
     multimodal_image_meta; pixel rule: px[i] = (byte[i mod n] +
     (i // 7) * 13) mod 256."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_image_meta_filtered
-
-    out = decode_image_meta_filtered(d)
+    out = run_rung(d, RUNGS["png_filtered"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),
@@ -145,14 +145,12 @@ def multimodal_image_decode_adam7(spark, sf_dir):
     pixel_sum alone is permutation-invariant, so the oracle also
     recomputes pos_weighted_sum = sum((i % 9973 + 1) * px[i]) in
     raster order — a decoder that de-filters correctly but misplaces
-    a pass fails the hash. Same Arrow-batched two-stage mapInPandas
+    a pass fails the hash. Same Arrow-batched fused mapInPandas
     plumbing (map-only plan + one deliberate round-robin Exchange) as
     the filtered rung; pixel rule: px[i] = (byte[i mod n] +
     (i // 5) * 11) mod 256."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_image_meta_adam7
-
-    out = decode_image_meta_adam7(d)
+    out = run_rung(d, RUNGS["png_adam7"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),
@@ -192,12 +190,10 @@ def multimodal_jpeg_roundtrip(spark, sf_dir):
     reds the driver hash. Flat quant table keeps the bound tight
     (measured max err 2); pytest pins the measured ceiling and that
     smooth content genuinely compresses below raw size. Same
-    Arrow-batched two-stage mapInPandas + one deliberate round-robin
+    Arrow-batched fused mapInPandas + one deliberate round-robin
     Exchange shape as the other CPU-bound rungs."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_jpeg_roundtrip
-
-    out = decode_jpeg_roundtrip(d)
+    out = run_rung(d, RUNGS["jpeg"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),
@@ -246,14 +242,12 @@ def multimodal_gif_decode(spark, sf_dir):
     hash mismatch. pytest additionally pins the spec's exact code
     stream for a known input (round-trip tests alone cannot catch a
     symmetric encoder/decoder bug) and that run-structured content
-    genuinely compresses. Same Arrow-batched two-stage mapInPandas +
+    genuinely compresses. Same Arrow-batched fused mapInPandas +
     one deliberate round-robin Exchange shape as the other CPU-bound
     rungs; at 100 TB this is a map-only stage — no shuffle, no
     collect, parallelism = input splits."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_gif_meta
-
-    out = decode_gif_meta(d)
+    out = run_rung(d, RUNGS["gif"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),
@@ -295,13 +289,11 @@ def multimodal_adpcm_roundtrip(spark, sf_dir):
     ADPCM_TOL) and the oracle expects TRUE per doc — a step-table
     slip, nibble-order swap, or clamp bug errs in the thousands and
     reds the driver hash. pytest pins the measured error ceiling and
-    the ~3.9:1 real compression. Same Arrow-batched two-stage
+    the ~3.9:1 real compression. Same Arrow-batched fused
     mapInPandas + round-robin Exchange shape as the other CPU-bound
     rungs; map-only at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_adpcm_roundtrip
-
-    out = decode_adpcm_roundtrip(d)
+    out = run_rung(d, RUNGS["adpcm"])
     return out.select(
         "doc_id",
         F.col("sample_rate").cast("int").alias("sample_rate"),
@@ -346,12 +338,10 @@ def multimodal_mjpeg_frames(spark, sf_dir):
     source (frame f shifts the smooth JPEG content family by f*11, so
     a reordered or dropped frame reds the hash, same discipline as
     multimodal_video_motion); geometry, fps, and frame counts are
-    SQL-exact. Same Arrow-batched two-stage mapInPandas + round-robin
+    SQL-exact. Same Arrow-batched fused mapInPandas + round-robin
     Exchange shape; map-only at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_mjpeg_frames
-
-    out = decode_mjpeg_frames(d)
+    out = run_rung(d, RUNGS["mjpeg"])
     return out.select(
         "doc_id",
         F.col("frame_idx").cast("int").alias("frame_idx"),
@@ -384,8 +374,6 @@ def multimodal_audio_windows(spark, sf_dir):
     third modality of the binary-column plumbing (the corpus is ASCII,
     so the byte-level oracle mirrors via ascii(substr))."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import audio_window_features
-
     out = audio_window_features(d)
     return out.select(
         "doc_id",
@@ -433,9 +421,7 @@ def multimodal_audio_decode(spark, sf_dir):
     'real media decode' boundary for uncompressed audio; compressed
     codecs (mp3/aac) remain the documented import-try boundary."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_audio_meta
-
-    return decode_audio_meta(d)
+    return run_rung(d, RUNGS["wav"])
 
 
 @query(
@@ -483,9 +469,7 @@ def multimodal_video_decode(spark, sf_dir):
     checksum, so a decoder that misreads any header field or any
     frame byte hash-fails the gate."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_video_meta
-
-    return decode_video_meta(d)
+    return run_rung(d, RUNGS["avi"])
 
 
 @query(
@@ -528,9 +512,7 @@ def multimodal_audio_envelope(spark, sf_dir):
     whole decimation against its own recompute of the sample rule.
     Same map-only Arrow-batched shape as multimodal_audio_decode."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_audio_envelope
-
-    return decode_audio_envelope(d)
+    return run_rung(d, RUNGS["wav_envelope"])
 
 
 @query(
@@ -585,9 +567,7 @@ def multimodal_video_motion(spark, sf_dir):
     UNION ALL branch (the per-pixel CTE has no rows to group for
     them). Map-only Arrow-batched shape."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_video_motion
-
-    return decode_video_motion(d)
+    return run_rung(d, RUNGS["avi_motion"])
 
 
 @query(
@@ -645,10 +625,8 @@ def multimodal_frame_dup_groups(spark, sf_dir):
     hash-groupBy whose shuffle key is ~24 bytes per FRAME (not per
     pixel); frame volume = corpus frames, so the shuffle is bounded
     by metadata, never media bytes."""
-    from .blobs import video_frame_ahash
-
     d = load_table(spark, sf_dir, "documents")
-    h = video_frame_ahash(d)
+    h = run_rung(d, RUNGS["avi_frame_ahash"])
     return (
         h.groupBy("width", "height", "ahash")
         .agg(
@@ -725,10 +703,8 @@ def multimodal_image_dup_groups(spark, sf_dir):
     bit). Groups = images agreeing on (dims, channels, ahash) — the
     multimodal dedup step; at 100 TB this is a hash-groupBy whose key
     is 28 bytes/image, the same scale shape as text dedup_exact."""
-    from .blobs import image_ahash
-
     d = load_table(spark, sf_dir, "documents")
-    h = image_ahash(d)
+    h = run_rung(d, RUNGS["png_ahash"])
     return (
         h.groupBy("width", "height", "channels", "ahash")
         .agg(
@@ -788,8 +764,6 @@ def audio_vad_segments(spark, sf_dir):
     crosses rows afterwards — island ids, bounds, peaks — is
     integer."""
     from pyspark.sql import Window as W
-
-    from .blobs import audio_window_features
 
     d = load_table(spark, sf_dir, "documents")
     win = audio_window_features(d)
@@ -852,14 +826,12 @@ def multimodal_deflate_decode(spark, sf_dir):
     driver-red hash mismatch. pytest additionally cross-checks the
     decoder bit-exactly against stdlib zlib in both directions (all
     compression levels 0-9) and pins the per-blob block-type mix.
-    Same Arrow-batched two-stage mapInPandas + one deliberate
+    Same Arrow-batched fused mapInPandas + one deliberate
     round-robin Exchange shape as the other CPU-bound rungs; at 100 TB
     this is a map-only stage — no shuffle, no collect, parallelism =
     input splits."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_deflate_payload
-
-    return decode_deflate_payload(d).select(
+    return run_rung(d, RUNGS["deflate"]).select(
         "doc_id", "n_bytes", "byte_sum", "pos_weighted_sum",
         "adler32", "has_all_btypes",
     )
@@ -910,14 +882,12 @@ def multimodal_flac_decode(spark, sf_dir):
     the decoded PCM. pytest pins round-trips across constant / ramp /
     white-noise / corpus content, genuine compression on the ladder
     content, and corruption rejection (sync, both CRCs, MD5, frame
-    order). Same Arrow-batched two-stage mapInPandas + one deliberate
+    order). Same Arrow-batched fused mapInPandas + one deliberate
     round-robin Exchange shape as the other CPU-bound rungs; at
     100 TB this is a map-only stage — no shuffle, no collect,
     parallelism = input splits."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_flac_meta
-
-    return decode_flac_meta(d).select(
+    return run_rung(d, RUNGS["flac"]).select(
         "doc_id", "sample_rate", "n_samples", "n_frames",
         "sample_sum", "pos_weighted_sum", "md5_ok",
     )
@@ -962,14 +932,12 @@ def multimodal_arith_decode(spark, sf_dir):
     adaptive model genuinely beat 8 bits/byte on every doc. pytest
     pins round-trips across content classes, encode determinism,
     adaptive compression floors, and corruption rejection. Same
-    Arrow-batched two-stage mapInPandas + one deliberate round-robin
+    Arrow-batched fused mapInPandas + one deliberate round-robin
     Exchange shape as the other CPU-bound rungs; at 100 TB this is a
     map-only stage — no shuffle, no collect, parallelism = input
     splits."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_rc_payload
-
-    return decode_rc_payload(d).select(
+    return run_rung(d, RUNGS["arith"]).select(
         "doc_id", "n_bytes", "byte_sum", "pos_weighted_sum",
         "adler32", "compressed",
     )
@@ -1030,15 +998,13 @@ def multimodal_mpeg_motion(spark, sf_dir):
     matching interior vectors, frame types, and geometry, while
     within_tolerance bounds the lossy reconstruction at MPEG_TOL. A
     misparsed Exp-Golomb bit, swapped vector components, wrong
-    macroblock raster order, or drifting P-frame reconstruction is a
-    driver-red hash mismatch. Same Arrow-batched two-stage mapInPandas
+    macroblock raster order, or drifting P-frame reconstruction is an
+    oracle hash mismatch. Same Arrow-batched fused mapInPandas
     + one deliberate round-robin Exchange shape as the other CPU-bound
     rungs; map-only at 100 TB — no shuffle, parallelism = input
     splits."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_mpeg_frames
-
-    out = decode_mpeg_frames(d)
+    out = run_rung(d, RUNGS["mpeg"])
     return out.select(
         "doc_id",
         F.col("frame_idx").cast("int").alias("frame_idx"),
@@ -1093,12 +1059,10 @@ def multimodal_mdct_audio(spark, sf_dir):
     the partial-tail-frame count ceil(n/128)+1); within_tolerance
     re-bounds the lossy reconstruction at MAU_TOL, enforced at blob
     generation per the ADVICE r10 discipline. Same Arrow-batched
-    two-stage mapInPandas + one deliberate round-robin Exchange shape;
+    fused mapInPandas + one deliberate round-robin Exchange shape;
     map-only at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_mau_meta
-
-    out = decode_mau_meta(d)
+    out = run_rung(d, RUNGS["mau1"])
     return out.select(
         "doc_id",
         F.col("sample_rate").cast("int").alias("sample_rate"),
@@ -1151,13 +1115,11 @@ def multimodal_psycho_audio(spark, sf_dir):
     model deliberately leaves noise where it is masked) while snr_ok
     floors the noise ENERGY at 36 dB SNR (measured corpus worst:
     44.5 dB) — both enforced at generation. Geometry and the raw
-    header first sample are SQL-exact. Same Arrow-batched two-stage
+    header first sample are SQL-exact. Same Arrow-batched fused
     mapInPandas + one round-robin Exchange shape; map-only at
     100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_mau2_meta
-
-    out = decode_mau2_meta(d)
+    out = run_rung(d, RUNGS["mau2"])
     return out.select(
         "doc_id",
         F.col("sample_rate").cast("int").alias("sample_rate"),
@@ -1171,7 +1133,7 @@ def multimodal_psycho_audio(spark, sf_dir):
 
 # Shared by the batch rung AND the streaming decode-at-ingest query
 # (streaming/queries.py::stream_avc_ingest): an availableNow file
-# stream through the same Arrow decode stages is row-identical to the
+# stream through the same fused Arrow decode op is row-identical to the
 # batch run, so both check against this exact SQL.
 AVC_ORACLE = """
     WITH params AS (
@@ -1238,13 +1200,11 @@ def multimodal_avc_intra(spark, sf_dir):
     qP//6 shift banks and every qP%6 LUT column across the corpus. A
     misparsed MPM bit, a wrong LUT cell, a swapped butterfly, or a
     prediction-equation typo reds the driver hash. Same Arrow-batched
-    two-stage mapInPandas + one deliberate round-robin Exchange shape
+    fused mapInPandas + one deliberate round-robin Exchange shape
     as the other CPU-bound rungs; map-only at 100 TB — no shuffle,
     parallelism = input splits."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_avc_intra
-
-    out = decode_avc_intra(d)
+    out = run_rung(d, RUNGS["avc"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),
@@ -1337,12 +1297,10 @@ def multimodal_avc_cavlc(spark, sf_dir):
     quantizer in SQL from the MF column and intra offset. A wrong
     context, a desynced run width, or a mis-adapted suffix reds the
     checksum (Adler-32 over the reconstruction) or the counts. Same
-    Arrow-batched two-stage mapInPandas + one deliberate round-robin
+    Arrow-batched fused mapInPandas + one deliberate round-robin
     Exchange shape; map-only at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    from .blobs import decode_avc_cavlc
-
-    out = decode_avc_cavlc(d)
+    out = run_rung(d, RUNGS["avcc"])
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),

@@ -540,9 +540,9 @@ def stream_funnel_stages(spark, sf_dir):
 def stream_avc_ingest(spark, sf_dir):
     """Multimodal DECODE-AT-INGEST: the AVC1 rung executed as a
     STRUCTURED STREAMING pipeline — documents arrive as a file stream,
-    the same two Arrow-batched mapInPandas stages (blob generation
-    with its enforced corpus contracts, then the real bitstream
-    decode) run inside each micro-batch, and per-doc rows land in the
+    the batch rung's fused Arrow-batched mapInPandas (blob generation,
+    the real bitstream decode and the enforced corpus contracts) runs
+    inside each micro-batch, and per-doc rows land in the
     sink append-mode, exactly once. This is the shape a 100 TB
     multimodal ingest actually runs: decode/validate/fingerprint AT
     ingest, not as a later batch pass — per-file parallelism, no
@@ -556,11 +556,11 @@ def stream_avc_ingest(spark, sf_dir):
     becomes a parquet/Delta sink and the exactly-once discipline is
     the file-source + checkpoint contract proven for the tickgen
     source in tests/test_streaming.py."""
-    from ..multimodal.blobs import decode_avc_intra
+    from ..multimodal.blobs import RUNGS, run_rung
     from .core import documents_stream
 
     docs = documents_stream(spark, sf_dir)
-    out = run_to_table(decode_avc_intra(docs), spark, "append")
+    out = run_to_table(run_rung(docs, RUNGS["avc"]), spark, "append")
     return out.select(
         "doc_id",
         F.col("width").cast("int").alias("width"),

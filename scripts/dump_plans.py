@@ -169,9 +169,9 @@ SHOWCASE = [
         "multimodal_mjpeg_frames",
         "Compressed-video rung (r10, per-frame JPEG entropy decode "
         "inside an MJPEG AVI container): the same deliberate "
-        "RoundRobinPartitioning Exchange + two Arrow-batched "
-        "MapInPandas stages as every CPU-bound codec rung, then a pure "
-        "per-frame row expansion — no shuffle after decode, no collect; "
+        "RoundRobinPartitioning Exchange + ONE fused Arrow-batched "
+        "MapInPandas (generate, encode, decode, per-frame rows) as every "
+        "CPU-bound codec rung — no shuffle after decode, no collect; "
         "the heaviest codec in the ladder stays map-only.",
     ),
     (
@@ -180,8 +180,8 @@ SHOWCASE = [
         "pixels/doc): ONE deliberate RoundRobinPartitioning Exchange of "
         "the tiny (doc_id, text) rows decouples decode parallelism from "
         "file layout (a single-file corpus would serialize the codec on "
-        "one core); both codec stages are Arrow-batched MapInPandas; no "
-        "other shuffle.",
+        "one core); encode and decode run fused in ONE Arrow-batched "
+        "MapInPandas; no other shuffle.",
     ),
     (
         "multimodal_deflate_decode",
@@ -203,8 +203,8 @@ SHOWCASE = [
         "Motion-compensated video rung (r11, MPV1: intra JPEG-DCT frame "
         "+ P-frames with full-search motion vectors and coded "
         "residuals, Exp-Golomb MV coding): the same one deliberate "
-        "RoundRobinPartitioning Exchange + two Arrow-batched "
-        "MapInPandas stages as every CPU-bound codec rung; motion "
+        "RoundRobinPartitioning Exchange + ONE fused Arrow-batched "
+        "MapInPandas as every CPU-bound codec rung; motion "
         "search, closed-loop reconstruction and bitstream decode are "
         "all per-doc CPU work — map-only at 100 TB.",
     ),

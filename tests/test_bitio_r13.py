@@ -358,6 +358,26 @@ def test_mpeg_entropy_code_matches_code_block_reference():
         assert bw1.flush() == bw2.flush(), trial
 
 
+def test_mpeg_entropy_code_rejects_dc_diff_without_size_category():
+    """|DC diff| >= 2048 has no DC size category in the luma table:
+    the vectorized coder must raise KeyError like the sequential
+    _code_block, not emit a zero-length DC code (the AC guard's twin)."""
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.mpeg import (
+        _BitWriter, _entropy_code, _entropy_code_ref)
+
+    for diff in (2048, -2048, 4095, 40000):
+        zz = np.zeros((2, 64), dtype=np.int64)
+        zz[1, 0] = diff  # block 0 codes cleanly, block 1 does not
+        for code, blocks in ((_entropy_code, zz), (_entropy_code_ref, zz.tolist())):
+            with pytest.raises(KeyError):
+                code(_BitWriter(), blocks, 0)
+    zz = np.zeros((1, 64), dtype=np.int64)
+    zz[0, 0] = 2047  # the largest diff that has a category still codes
+    bw1, bw2 = _BitWriter(), _BitWriter()
+    assert _entropy_code(bw1, zz, 0) == _entropy_code_ref(bw2, zz.tolist(), 0)
+    assert bw1.flush() == bw2.flush()
+
+
 def test_write_many_continues_partial_byte_state():
     from matrix_multiplication_map_reduce_gcp_spark.multimodal.mpeg import (
         _BitWriter)

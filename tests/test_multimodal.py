@@ -12,15 +12,27 @@ from pyspark.sql import types as T
 
 from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
 from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-    decode_image_meta,
+    RUNGS,
     png_decode,
     png_encode,
+    run_rung,
     sample_frames,
     with_blob,
-    with_png_blob,
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def rung_blobs(name, docs):
+    """{doc_id: blob} as rung ``name``'s fused op builds them — its
+    gen + encode in plain Python over the collected (doc_id, text)
+    rows."""
+    rung = RUNGS[name]
+    out = {}
+    for r in docs.select("doc_id", "text").collect():
+        args, _ = rung.gen(r.text.encode("utf-8"))
+        out[r.doc_id] = rung.encode(*args)
+    return out
 
 
 def test_blob_column_is_binary(spark):
@@ -50,20 +62,20 @@ def test_png_decode_rejects_corruption():
 def test_png_blobs_are_real_files(spark):
     """Every generated blob is a parseable PNG whose IDAT inflates to
     filter-0 scanlines of the advertised geometry."""
-    blobs = with_png_blob(load_table(spark, SF, "documents")).limit(20).collect()
+    blobs = rung_blobs("png", load_table(spark, SF, "documents").limit(20))
     assert blobs
-    for r in blobs:
-        w, h, ch, px = png_decode(bytes(r.blob))
+    for blob in blobs.values():
+        w, h, ch, px = png_decode(blob)
         assert len(px) == w * h * ch
         assert 1 <= w <= 8 and 1 <= h <= 8 and ch in (1, 3)
 
 
 def test_decode_meta_recovers_generation_rule(spark):
-    """End-to-end through TWO mapInPandas stages: the decoder (which
+    """End-to-end through the fused mapInPandas: the decoder (which
     sees only bytes) must report exactly what the generation rule
     implies from the text."""
     docs = load_table(spark, SF, "documents")
-    meta = decode_image_meta(docs)
+    meta = run_rung(docs, RUNGS["png"])
     joined = meta.join(docs, "doc_id").select(
         "doc_id", "width", "height", "channels", "n_pixels", "pixel_sum", "text"
     )
@@ -148,31 +160,24 @@ def test_wav_blobs_are_real_files(spark):
     """Every generated blob is a parseable PCM WAV whose data chunk
     decodes to the advertised frame count and whose geometry follows
     the generation rule."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        wav_decode,
-        with_wav_blob,
-    )
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import wav_decode
 
-    blobs = with_wav_blob(load_table(spark, SF, "documents")).limit(20).collect()
+    blobs = rung_blobs("wav", load_table(spark, SF, "documents").limit(20))
     assert blobs
-    for r in blobs:
-        rate, ch, bits, nf, samples = wav_decode(bytes(r.blob))
+    for blob in blobs.values():
+        rate, ch, bits, nf, samples = wav_decode(blob)
         assert rate in (8000, 16000, 24000) and ch in (1, 2) and bits == 16
         assert 1 <= nf <= 32 and samples.size == nf * ch
 
 
 def test_wav_decode_meta_recovers_generation_rule(spark):
-    """End-to-end through TWO mapInPandas stages: the WAV decoder
+    """End-to-end through the fused mapInPandas: the WAV decoder
     (which sees only bytes) must report exactly what the generation
     rule implies from the text — including the content checksum."""
     import numpy as np
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_audio_meta,
-    )
-
     docs = load_table(spark, SF, "documents")
-    meta = decode_audio_meta(docs)
+    meta = run_rung(docs, RUNGS["wav"])
     joined = meta.join(docs, "doc_id").select(
         "doc_id", "sample_rate", "channels", "bit_depth", "n_frames",
         "sample_sum", "text",
@@ -248,15 +253,12 @@ def test_avi_decode_rejects_corruption():
 def test_avi_blobs_are_real_files(spark):
     """Every generated blob is a parseable AVI whose movi frames match
     the advertised geometry."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        avi_decode,
-        with_avi_blob,
-    )
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import avi_decode
 
-    blobs = with_avi_blob(load_table(spark, SF, "documents")).limit(20).collect()
+    blobs = rung_blobs("avi", load_table(spark, SF, "documents").limit(20))
     assert blobs
-    for r in blobs:
-        w, h, fps, nf, frames = avi_decode(bytes(r.blob))
+    for blob in blobs.values():
+        w, h, fps, nf, frames = avi_decode(blob)
         assert 1 <= w <= 8 and 1 <= h <= 8 and 1 <= nf <= 6
         assert fps in (5, 10, 15, 20, 25)
         assert len(frames) == nf
@@ -268,12 +270,8 @@ def test_frame_ahash_identical_docs_collide(spark):
     produce identical AVIs, so ALL their frames must collide pairwise
     on (width, height, ahash) — and the corpus' planted duplicates
     must surface as multi-doc groups."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        video_frame_ahash,
-    )
-
     docs = load_table(spark, SF, "documents")
-    h = video_frame_ahash(docs)
+    h = run_rung(docs, RUNGS["avi_frame_ahash"])
     # identical text => identical frame hash sets, positionally
     dup = (
         docs.groupBy("text").count().filter(F.col("count") >= 2).limit(1)
@@ -331,22 +329,71 @@ def test_avi_decode_rejects_compressed_frame_chunks():
         avi_decode(swapped)
 
 
-def test_blob_generators_raise_on_non_ascii_text(spark):
+@pytest.mark.parametrize("name", sorted(RUNGS))
+def test_blob_generators_raise_on_non_ascii_text(spark, name):
     """ADVICE r8: the SQL oracles index text by CHARACTER
     (ascii(substr)) while the generators index UTF-8 BYTES — equal
-    only for ASCII. A non-ASCII doc must raise loudly in the
-    generator, never silently diverge from the oracle."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        with_avi_blob,
-        with_png_blob,
-        with_wav_blob,
-    )
+    only for ASCII. A non-ASCII doc must raise loudly in EVERY rung,
+    never silently diverge from the oracle; a rung whose oracle needs
+    non-empty text raises on "" too (its UNNEST(range(0, n)) emits
+    no row for an empty payload), and every other rung accepts it."""
+    rung = RUNGS[name]
+    schema = "doc_id long, text string"
+    bad = spark.createDataFrame([(1, "café au lait")], schema)
+    with pytest.raises(Exception, match="non-ASCII document text"):
+        run_rung(bad, rung).collect()
+    empty = run_rung(spark.createDataFrame([(1, "")], schema), rung)
+    if rung.nonempty:
+        with pytest.raises(Exception, match="empty document text"):
+            empty.collect()
+    else:
+        assert empty.collect()
 
-    bad = spark.createDataFrame([(1, "café au lait")], "doc_id long, text string")
-    for gen in (with_png_blob, with_wav_blob, with_avi_blob):
-        with pytest.raises(Exception, match="non-ASCII"):
-            gen(bad).collect()
 
+
+def test_rung_contracts_raise_on_breach(spark):
+    """Every generation-time corpus contract still fails loudly with its
+    own message: RC01 end to end on a too-short doc, and the MPV1 /
+    MAU1 / MAU2 / AVC1 / AVCC contracts on a real doc's encoder stats
+    and decode with one designed property broken."""
+    short = spark.createDataFrame([(1, "Qz!")], "doc_id long, text string")
+    with pytest.raises(Exception, match="RC01 corpus contract violated"):
+        run_rung(short, RUNGS["arith"]).collect()
+
+    def parts(name):
+        rung = RUNGS[name]
+        args, src = rung.gen(b"The quick brown fox jumps over the lazy dog again.")
+        enc = rung.encode(*args)
+        out = rung.decode(enc[0] if isinstance(enc, tuple) else enc)
+        rung.contract(7, src, enc, out)  # the real doc holds its contract
+        return rung.contract, src, enc, out
+
+    check, src, (blob, mvs, errs), out = parts("mpeg")
+    bad_mvs = [list(m) for m in mvs]
+    bad_mvs[1][0] = (0, 0)
+    with pytest.raises(ValueError, match="MPV1 .* half-pel mv"):
+        check(7, src, (blob, bad_mvs, errs), out)
+    with pytest.raises(ValueError, match="MPV1 .* > MPEG_TOL"):
+        check(7, src, (blob, mvs, [99] * len(errs)), out)
+    for name in ("mau1", "mau2"):
+        check, src, enc, out = parts(name)
+        far = out[:4] + ([v + 4000 for v in out[4]],)
+        with pytest.raises(ValueError, match=f"{name.upper()} corpus contract"):
+            check(7, src, enc, far)
+    for name, tag in (("avc", "AVC1"), ("avcc", "AVCC")):
+        check, src, enc, out = parts(name)
+        modes = enc[1].copy()
+        modes[0, 0] = modes[0, 1]
+        with pytest.raises(ValueError, match=f"{tag} .* departs from the designed"):
+            check(7, src, (enc[0], modes) + enc[2:], out)
+        recon = enc[2].copy()
+        recon[0, 0] ^= 1
+        with pytest.raises(ValueError, match=f"{tag} .* not exact"):
+            check(7, src, enc[:2] + (recon,) + enc[3:], out)
+    tc = enc[3].copy()
+    tc[0, 0] += 1
+    with pytest.raises(ValueError, match="AVCC .* closed-form stripe prediction"):
+        check(7, src, enc[:3] + (tc,), out)
 
 @pytest.mark.parametrize(
     "sf_dir",
@@ -538,27 +585,23 @@ def test_adam7_blobs_are_real_files(spark):
     the documented geometry/pixel rule, decodable by the full
     de-interlace path — and the raster-order pixels follow the
     generation rule exactly (position check, not just a sum)."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        with_png_blob_adam7,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    blobs = with_png_blob_adam7(docs).limit(20).collect()
-    texts = {r.doc_id: r.text for r in docs.limit(2000).collect()}
+    docs = load_table(spark, SF, "documents").limit(20)
+    blobs = rung_blobs("png_adam7", docs)
+    texts = {r.doc_id: r.text for r in docs.collect()}
     assert blobs
     import numpy as np
 
-    for r in blobs:
-        w, h, ch, px = png_decode(bytes(r.blob))
+    for doc_id, blob in blobs.items():
+        w, h, ch, px = png_decode(blob)
         assert 16 <= w <= 32 and 16 <= h <= 32 and ch == 3
-        t = texts[r.doc_id].encode()
+        t = texts[doc_id].encode()
         if t:
             assert w == 16 + t[0] % 17 and h == 16 + t[-1] % 17
             m = w * h * 3
             i = np.arange(m, dtype=np.int64)
             src = np.frombuffer(t, dtype=np.uint8).astype(np.int64)[i % len(t)]
             expected = ((src + (i // 5) * 11) % 256).astype(np.uint8).tobytes()
-            assert px == expected, f"doc {r.doc_id}: pixel rule mismatch"
+            assert px == expected, f"doc {doc_id}: pixel rule mismatch"
 
 
 def test_jpeg_codec_roundtrip_and_bound():
@@ -695,17 +738,11 @@ def test_jpeg_blobs_roundtrip_on_spark(spark):
     """The registered round-trip op end to end on the corpus: real
     JFIF blobs at the documented geometry, decoded and bounded
     against regenerated source pixels — every doc within JPEG_TOL."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_jpeg_roundtrip,
-        with_jpeg_blob,
-    )
-
     docs = load_table(spark, SF, "documents")
-    blobs = with_jpeg_blob(docs).limit(5).collect()
-    for r in blobs:
-        assert bytes(r.blob)[:2] == b"\xff\xd8"
-        assert bytes(r.blob)[-2:] == b"\xff\xd9"
-    out = decode_jpeg_roundtrip(docs)
+    for blob in rung_blobs("jpeg", docs.limit(5)).values():
+        assert blob[:2] == b"\xff\xd8"
+        assert blob[-2:] == b"\xff\xd9"
+    out = run_rung(docs, RUNGS["jpeg"])
     rows = out.collect()
     assert rows and all(r.within_tolerance for r in rows)
     for r in rows:
@@ -717,18 +754,14 @@ def test_filtered_png_blobs_are_real_files(spark):
     """Every large-geometry filtered blob is a standards-compliant PNG
     at the documented geometry rule, decodable by the full de-filter
     path."""
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        with_png_blob_filtered,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    blobs = with_png_blob_filtered(docs).limit(20).collect()
-    texts = {r.doc_id: r.text for r in docs.limit(2000).collect()}
+    docs = load_table(spark, SF, "documents").limit(20)
+    blobs = rung_blobs("png_filtered", docs)
+    texts = {r.doc_id: r.text for r in docs.collect()}
     assert blobs
-    for r in blobs:
-        w, h, ch, px = png_decode(bytes(r.blob))
+    for doc_id, blob in blobs.items():
+        w, h, ch, px = png_decode(blob)
         assert 16 <= w <= 32 and 16 <= h <= 32 and ch == 3
-        t = texts[r.doc_id].encode()
+        t = texts[doc_id].encode()
         if t:
             assert w == 16 + t[0] % 17 and h == 16 + t[-1] % 17
         assert len(px) == w * h * 3
@@ -745,15 +778,11 @@ def test_audio_envelope_kernel_semantics(spark):
     samples themselves."""
     import numpy as np
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_audio_envelope,
-        wav_decode,
-        with_wav_blob,
-    )
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import wav_decode
 
     docs = load_table(spark, SF, "documents").limit(30)
-    env = {r.doc_id: r for r in decode_audio_envelope(docs).collect()}
-    blobs = {r.doc_id: bytes(r.blob) for r in with_wav_blob(docs).collect()}
+    env = {r.doc_id: r for r in run_rung(docs, RUNGS["wav_envelope"]).collect()}
+    blobs = rung_blobs("wav", docs)
     assert env and set(env) == set(blobs)
     for doc_id, blob in blobs.items():
         rate, ch, bits, nf, samples = wav_decode(blob)
@@ -775,15 +804,11 @@ def test_video_motion_kernel_semantics(spark):
     recompute from the decoded frames themselves."""
     import numpy as np
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        avi_decode,
-        decode_video_motion,
-        with_avi_blob,
-    )
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import avi_decode
 
     docs = load_table(spark, SF, "documents").limit(30)
-    mot = {r.doc_id: r for r in decode_video_motion(docs).collect()}
-    blobs = {r.doc_id: bytes(r.blob) for r in with_avi_blob(docs).collect()}
+    mot = {r.doc_id: r for r in run_rung(docs, RUNGS["avi_motion"]).collect()}
+    blobs = rung_blobs("avi", docs)
     saw_single = saw_multi = False
     for doc_id, blob in blobs.items():
         w, h, fps, nf, frames = avi_decode(blob)
@@ -881,13 +906,11 @@ def test_gif_blobs_are_real_files_and_decode_sums_match(spark):
     independent numpy recomputation of the generation rule."""
     import numpy as np
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import decode_gif_meta
-
     docs = spark.createDataFrame(
         [(1, "alpha bravo"), (2, "charlie!"), (3, "x")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in decode_gif_meta(docs).collect()}
+    out = {r["doc_id"]: r for r in run_rung(docs, RUNGS["gif"]).collect()}
     for doc_id, text in [(1, "alpha bravo"), (2, "charlie!"), (3, "x")]:
         b = text.encode()
         n = len(b)
@@ -908,7 +931,7 @@ def test_gif_blobs_are_real_files_and_decode_sums_match(spark):
 
 def _adpcm_triangle(text: bytes, n_blocks: int):
     """The ladder generation rule for the ADPCM rung (mirrors
-    blobs.with_adpcm_blob)."""
+    blobs.RUNGS["adpcm"])."""
     import numpy as np
 
     from matrix_multiplication_map_reduce_gcp_spark.multimodal.adpcm import SAMPLES_PER_BLOCK
@@ -1014,21 +1037,16 @@ def test_adpcm_wav_decode_rejects_corruption():
 
 
 def test_adpcm_blobs_are_real_files_and_first_sample_exact(spark):
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_adpcm_roundtrip,
-        with_adpcm_blob,
-    )
-
     docs = spark.createDataFrame(
         [(1, "alpha bravo"), (2, "charlie!"), (3, "x")],
         "doc_id long, text string",
     )
-    blobs = {r["doc_id"]: bytes(r["blob"]) for r in with_adpcm_blob(docs).collect()}
+    blobs = rung_blobs("adpcm", docs)
     for doc_id, text in [(1, "alpha bravo"), (2, "charlie!"), (3, "x")]:
         b = blobs[doc_id]
         assert b[:4] == b"RIFF" and b[8:12] == b"WAVE"
         assert b"fact" in b and b"data" in b
-    out = {r["doc_id"]: r for r in decode_adpcm_roundtrip(docs).collect()}
+    out = {r["doc_id"]: r for r in run_rung(docs, RUNGS["adpcm"]).collect()}
     for doc_id, text in [(1, "alpha bravo"), (2, "charlie!"), (3, "x")]:
         t = text.encode()
         r = out[doc_id]
@@ -1089,12 +1107,10 @@ def test_mjpeg_avi_roundtrip_and_guards():
 
 
 def test_mjpeg_blobs_decode_per_frame_on_spark(spark):
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import decode_mjpeg_frames
-
     docs = spark.createDataFrame(
         [(1, "alpha bravo"), (2, "charlie!")], "doc_id long, text string"
     )
-    rows = decode_mjpeg_frames(docs).collect()
+    rows = run_rung(docs, RUNGS["mjpeg"]).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -1116,10 +1132,10 @@ def test_worker_closures_self_contained_from_foreign_cwd():
     at CALL time inside a worker closure — invisible when pytest runs
     from the repo root (workers find the package via cwd) but fatal
     under the driver contract, which executes from /tmp. Exercise
-    EVERY worker-shipped multimodal path in a subprocess whose cwd is
-    /tmp so the Python workers cannot import the package: any
-    call-time relative import in worker code dies here with
-    ModuleNotFoundError."""
+    EVERY worker-shipped multimodal path (every rung in the table) in
+    a subprocess whose cwd is /tmp so the Python workers cannot import
+    the package: any call-time relative import in worker code dies
+    here with ModuleNotFoundError."""
     import subprocess
     import sys
 
@@ -1131,23 +1147,21 @@ spark = (SparkSession.builder.master("local[2]")
          .config("spark.sql.shuffle.partitions","2")
          .config("spark.ui.enabled","false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
+from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
 from matrix_multiplication_map_reduce_gcp_spark.multimodal import blobs as B
-docs = spark.createDataFrame(
-    [(1, "alpha bravo"), (2, "zulu!")], "doc_id long, text string")
-builders = [
-    B.with_blob, B.decode_image_meta, B.decode_image_meta_filtered,
-    B.decode_image_meta_adam7, B.decode_jpeg_roundtrip,
-    B.decode_gif_meta, B.decode_adpcm_roundtrip, B.decode_audio_meta,
-    B.decode_audio_envelope, B.decode_video_meta, B.decode_video_motion,
-    B.decode_mjpeg_frames, B.image_ahash, B.video_frame_ahash,
-    B.audio_window_features, B.sample_frames,
-]
-for b in builders:
+# Corpus docs: every rung's generation-time contract holds on them.
+docs = load_table(spark, "@SF@", "documents").select("doc_id", "text").limit(2)
+builders = {"with_blob": B.with_blob,
+            "audio_window_features": B.audio_window_features,
+            "sample_frames": B.sample_frames}
+for name, rung in B.RUNGS.items():
+    builders[name] = lambda d, rung=rung: B.run_rung(d, rung)
+for name, b in builders.items():
     n = len(b(docs).collect())
-    assert n > 0, b.__name__
+    assert n > 0, name
 print("ALL_OK", len(builders))
 spark.stop()
-"""
+""".replace("@SF@", SF)
     proc = subprocess.run(
         [sys.executable, "-c", script],
         cwd="/tmp",
@@ -1346,10 +1360,6 @@ def test_deflate_blobs_decode_on_spark(spark):
     import numpy as np
     import zlib
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_deflate_payload,
-        with_deflate_blob,
-    )
     from matrix_multiplication_map_reduce_gcp_spark.multimodal.inflate import adler32_spec
 
     # corpus contract: generated doc texts are >=44 chars, so every
@@ -1357,8 +1367,8 @@ def test_deflate_blobs_decode_on_spark(spark):
     # the Huffman-only head cannot win a dynamic table
     docs = [(1, "alpha bravo charlie delta echo foxtrot golf hotel"), (2, "delta! " * 8), (3, "x" * 80)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    blobs = {r["doc_id"]: bytes(r["blob"]) for r in with_deflate_blob(df).collect()}
-    out = {r["doc_id"]: r for r in decode_deflate_payload(df).collect()}
+    blobs = rung_blobs("deflate", df)
+    out = {r["doc_id"]: r for r in run_rung(df, RUNGS["deflate"]).collect()}
     for doc_id, text in docs:
         b = text.encode()
         payload = b * (6 + b[0] % 5)
@@ -1543,11 +1553,9 @@ def test_flac_blobs_decode_on_spark(spark):
     generation rule."""
     import numpy as np
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import decode_flac_meta
-
     docs = [(1, "alpha bravo charlie"), (2, "delta echo!"), (3, "x" * 60)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in decode_flac_meta(df).collect()}
+    out = {r["doc_id"]: r for r in run_rung(df, RUNGS["flac"]).collect()}
     for doc_id, text in docs:
         b = text.encode()
         n = len(b)
@@ -1625,11 +1633,9 @@ def test_rc_blobs_decode_on_spark(spark):
     blob genuinely compressed."""
     import numpy as np
 
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import decode_rc_payload
-
     docs = [(1, "alpha bravo charlie delta"), (2, "the rain in spain " * 4)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in decode_rc_payload(df).collect()}
+    out = {r["doc_id"]: r for r in run_rung(df, RUNGS["arith"]).collect()}
     for doc_id, text in docs:
         payload = text.encode() * 2
         arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
@@ -1860,12 +1866,9 @@ def test_mpeg_blobs_decode_on_spark(spark):
     match the generation rule, every interior vector matches, and the
     reconstruction stays within MPEG_TOL."""
     from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_mpeg_frames,
-    )
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    rows = decode_mpeg_frames(d).collect()
+    rows = run_rung(d, RUNGS["mpeg"]).collect()
     assert rows
     by_doc = {}
     for r in rows:
@@ -1980,12 +1983,9 @@ def test_mau_rejects_corruption():
 
 def test_mau_blobs_decode_on_spark(spark):
     from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_mau_meta,
-    )
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    rows = decode_mau_meta(d).collect()
+    rows = run_rung(d, RUNGS["mau1"]).collect()
     assert rows
     for r in rows:
         assert r.within_tolerance, r.doc_id
@@ -2116,14 +2116,40 @@ def test_mau2_rejects_corruption():
         mau2_decode(blob + b"\x00")
 
 
-def test_mau2_blobs_decode_on_spark(spark):
-    from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_mau2_meta,
+def test_mau2_body_underrun_is_labelled_mau2():
+    """A MAU2 frame body shorter than its allocation needs fails as a
+    MAU2 underrun (the frame framing stays consistent: the length
+    field and the body shrink together, so only the bit reader can
+    notice)."""
+    import struct
+
+    import pytest
+
+    from matrix_multiplication_map_reduce_gcp_spark.multimodal.mdct import (
+        mau2_decode,
+        mau2_encode,
     )
 
+    blob = mau2_encode(8000, [((i * 37) % 2000) - 1000 for i in range(300)])
+    pos = 16  # magic + >IIhH header; frame 0's allocation nibbles follow
+    nibbles = [v for byte in blob[pos : pos + 8] for v in (byte >> 4, byte & 15)]
+    pos += 8 + 4 * sum(1 for v in nibbles if v)
+    (blen,) = struct.unpack(">H", blob[pos : pos + 2])
+    assert blen > 4
+    cut = blen // 2
+    bad = (
+        blob[:pos] + struct.pack(">H", blen - cut)
+        + blob[pos + 2 : pos + 2 + blen - cut] + blob[pos + 2 + blen :]
+    )
+    with pytest.raises(ValueError, match="truncated MAU2: bit stream underrun"):
+        mau2_decode(bad)
+
+
+def test_mau2_blobs_decode_on_spark(spark):
+    from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
+
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    rows = decode_mau2_meta(d).collect()
+    rows = run_rung(d, RUNGS["mau2"]).collect()
     assert rows
     for r in rows:
         assert r.within_tolerance and r.snr_ok, r.doc_id
@@ -2344,12 +2370,9 @@ def test_avc_blobs_decode_on_spark(spark):
     counts match the designed layout, the reconstruction is EXACT,
     and pixel_sum matches the generation rule."""
     from matrix_multiplication_map_reduce_gcp_spark.catalog import load_table
-    from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import (
-        decode_avc_intra,
-    )
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    rows = decode_avc_intra(d).collect()
+    rows = run_rung(d, RUNGS["avc"]).collect()
     assert rows
     for r in rows:
         nbx, nby = r.width // 4, r.height // 4

@@ -5,6 +5,7 @@ hot paths stay in whole-stage codegen, top-k never full-sorts."""
 from __future__ import annotations
 
 from matrix_multiplication_map_reduce_gcp_spark import registry
+from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import RUNGS
 from matrix_multiplication_map_reduce_gcp_spark.plans import (
     executed_plan,
     has_broadcast_hash_join,
@@ -121,65 +122,58 @@ def test_ann_recall_report_broadcasts_queries(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
+# Every codec-rung query and the rung it runs (blobs.RUNGS).
+CODEC_RUNG_QUERIES = {
+    "multimodal_image_meta": "png",
+    "multimodal_image_dup_groups": "png_ahash",
+    "multimodal_image_decode_filtered": "png_filtered",
+    "multimodal_image_decode_adam7": "png_adam7",
+    "multimodal_jpeg_roundtrip": "jpeg",
+    "multimodal_audio_decode": "wav",
+    "multimodal_audio_envelope": "wav_envelope",
+    "multimodal_video_decode": "avi",
+    "multimodal_video_motion": "avi_motion",
+    "multimodal_frame_dup_groups": "avi_frame_ahash",
+    "multimodal_gif_decode": "gif",
+    "multimodal_adpcm_roundtrip": "adpcm",
+    "multimodal_mjpeg_frames": "mjpeg",
+    "multimodal_deflate_decode": "deflate",
+    "multimodal_flac_decode": "flac",
+    "multimodal_arith_decode": "arith",
+    "multimodal_mpeg_motion": "mpeg",
+    "multimodal_mdct_audio": "mau1",
+    "multimodal_psycho_audio": "mau2",
+    "multimodal_avc_intra": "avc",
+    "multimodal_avc_cavlc": "avcc",
+}
+
+
 def test_media_decode_queries_are_map_only(spark):
-    """The r8 decode trilogy's scale contract (SCALING.md): encode +
-    decode are Arrow-batched mapInPandas stages with NO Exchange
-    anywhere — cost scales with corpus bytes alone. The frame-dedup
-    variant is allowed exactly its metadata hash-groupBy shuffle, and
-    nothing else."""
-    for name in ("multimodal_audio_decode", "multimodal_video_decode",
-                 "multimodal_audio_envelope", "multimodal_video_motion"):
+    """The codec ladder's scale contract (SCALING.md): every rung query
+    runs exactly ONE Arrow-batched mapInPandas — generate, encode,
+    decode and summarize fused, so no blob crosses the Arrow boundary
+    twice. The header-light PNG/WAV/AVI trilogy has NO Exchange — cost
+    scales with corpus bytes alone. Every CPU-bound rung deliberately
+    decouples decode parallelism from file layout with exactly ONE
+    round-robin repartition of the tiny (doc_id, text) rows (no key,
+    no skew) — a single-file corpus would otherwise serialize the
+    codec on one core — and nothing else. The two dedup queries add
+    only their metadata hash-groupBy shuffle."""
+    assert sorted(CODEC_RUNG_QUERIES.values()) == sorted(RUNGS)
+    assert {k for k, r in RUNGS.items() if not r.repartition} == {
+        "png", "png_ahash", "wav", "wav_envelope",
+        "avi", "avi_motion", "avi_frame_ahash",
+    }
+    groupby_exchanges = {
+        "multimodal_frame_dup_groups": 2,  # groupBy with count_distinct
+        "multimodal_image_dup_groups": 1,
+    }
+    for name, rung in CODEC_RUNG_QUERIES.items():
         plan = executed_plan(Q[name].fn(spark, SF_SMOKE))
-        assert "Exchange" not in plan, name
-        assert "MapInPandas" in plan, name
-    # The filtered-PNG query is CPU-bound (inflate + de-filter ~3 KB
-    # of pixels/doc), so it deliberately decouples decode parallelism
-    # from file layout with ONE round-robin repartition of the tiny
-    # (doc_id, text) rows — a single-file corpus would otherwise
-    # serialize the codec on one core. Exactly that one Exchange, and
-    # it must be round-robin (no key, no skew), nothing else.
-    filt = executed_plan(Q["multimodal_image_decode_filtered"].fn(spark, SF_SMOKE))
-    assert filt.count("Exchange") == 1, "filtered decode: one deliberate repartition"
-    assert "RoundRobinPartitioning" in filt
-    assert "MapInPandas" in filt
-    # Adam7 rung (r10): same CPU-bound codec shape — exactly the one
-    # deliberate round-robin Exchange, Arrow-batched stages, no other
-    # shuffle.
-    adam = executed_plan(Q["multimodal_image_decode_adam7"].fn(spark, SF_SMOKE))
-    assert adam.count("Exchange") == 1, "adam7 decode: one deliberate repartition"
-    assert "RoundRobinPartitioning" in adam
-    assert "MapInPandas" in adam
-    # JPEG round-trip (r10): entropy coding is the most CPU-intensive
-    # rung — same single deliberate round-robin Exchange, nothing else.
-    jpg = executed_plan(Q["multimodal_jpeg_roundtrip"].fn(spark, SF_SMOKE))
-    assert jpg.count("Exchange") == 1, "jpeg roundtrip: one deliberate repartition"
-    assert "RoundRobinPartitioning" in jpg
-    assert "MapInPandas" in jpg
-    # Motion-compensated MPV1 rung (r11): encode (with generation-time
-    # contract decode) + decode are the same CPU-bound codec shape —
-    # exactly the one deliberate round-robin Exchange, nothing else.
-    mpg = executed_plan(Q["multimodal_mpeg_motion"].fn(spark, SF_SMOKE))
-    assert mpg.count("Exchange") == 1, "mpeg motion: one deliberate repartition"
-    assert "RoundRobinPartitioning" in mpg
-    assert "MapInPandas" in mpg
-    # Perceptual-audio MAU1 rung (r11): same shape.
-    mau = executed_plan(Q["multimodal_mdct_audio"].fn(spark, SF_SMOKE))
-    assert mau.count("Exchange") == 1, "mdct audio: one deliberate repartition"
-    assert "RoundRobinPartitioning" in mau
-    assert "MapInPandas" in mau
-    # Psychoacoustic MAU2 rung (r11 wave 3): same shape.
-    psy = executed_plan(Q["multimodal_psycho_audio"].fn(spark, SF_SMOKE))
-    assert psy.count("Exchange") == 1, "psycho audio: one deliberate repartition"
-    assert "RoundRobinPartitioning" in psy
-    assert "MapInPandas" in psy
-    # AVC1 intra rung (r11 wave 4): same shape.
-    avc = executed_plan(Q["multimodal_avc_intra"].fn(spark, SF_SMOKE))
-    assert avc.count("Exchange") == 1, "avc intra: one deliberate repartition"
-    assert "RoundRobinPartitioning" in avc
-    assert "MapInPandas" in avc
-    dup = executed_plan(Q["multimodal_frame_dup_groups"].fn(spark, SF_SMOKE))
-    assert dup.count("Exchange") <= 2, "frame dedup: one groupBy shuffle only (+AQE read)"
-    assert "MapInPandas" in dup
+        assert plan.count("MapInPandas") == 1, name
+        rr = int(RUNGS[rung].repartition)
+        assert plan.count("RoundRobinPartitioning") == rr, name
+        assert plan.count("Exchange") == rr + groupby_exchanges.get(name, 0), name
 
 
 def test_no_python_udfs_in_relational_paths(spark):
