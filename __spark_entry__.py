@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check. Each ``queries()[name]`` runs at
+sf=0.01 and is compared against the matching ``oracle_sql()[name]``
+via DuckDB (row-count + schema + order-insensitive value-hash), as
+``tests/test_registry_oracle.py`` does. Both dicts follow the
+registry's canonical order (``registry.load_all()``).
 
 All real logic lives in the ``matrix_multiplication_map_reduce_gcp_spark`` package;
 this file only adapts the registry to the driver's shape.

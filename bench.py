@@ -273,7 +273,7 @@ def jvm_gc_ms(spark) -> int:
 
 def gc_drain(spark) -> None:
     """Full JVM heap drain (JMH-style inter-iteration hygiene).
-    The r7 A/Bs (scripts/ab_4000_block.py, ab_4000_gc.py) proved
+    The r7 A/Bs (SCALING.md "4000² measurement protocol") proved
     the 4000² block-matmul rep spread was HEAP STATE, not the
     plan: the GarbageCollectorMXBean counters attribute a 90.6 s
     rep to 21.1 s of in-rep GC (and 40/35 s reps to 5-6 s) right
@@ -440,8 +440,8 @@ def main() -> None:
         # TARGET SF as well. The sf0.01 warm-up stabilizes codegen but
         # not FIRST-EXECUTION-at-full-size costs — cold parquet page
         # cache + JIT tiering at real volume — which at sf1 put 2-5x
-        # of one-time cost into the first timed rep
-        # (probe_triangle_sf1: first rep 66-69 s vs a 23.5 s converged
+        # of one-time cost into the first timed rep (SCALING.md
+        # triangle sf1 probe: first rep 66-69 s vs a 23.5 s converged
         # floor, GC tiny). The heavy group's declared purpose is SCALE
         # RATIOS, not session cold-start; medians over reps that
         # include one cold rep swing with page-cache luck (the r10
@@ -656,7 +656,7 @@ def main() -> None:
     # Headline composition (VERDICT r8 #2): `value` EXCLUDES
     # matmul_dense_4000_block — its wall has shown 3-10× run-to-run
     # spread across JVM heap eras (adjudicated as environment, not
-    # plan, by scripts/ab_4000_spread.py), so summing it would let one
+    # plan, by the r8 A/B in SCALING.md), so summing it would let one
     # heap era swing the 44-query headline by ±15%. Its median is
     # still committed per-query in `queries` (with raw reps + gc
     # evidence in the full record) and tracked against its own bar

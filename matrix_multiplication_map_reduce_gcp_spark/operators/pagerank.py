@@ -215,7 +215,7 @@ def _triangle_top20(li):
     # ONE wave and its wall is the single slowest task — the r10 sf1
     # record showed a (31+1)/32 straggler tail holding the stage for
     # tens of seconds and a 118 s first rep. Four waves of smaller
-    # tasks amortize the skew: probe_triangle_sf1{_alt} measured sf1
+    # tasks amortize the skew: the r11 probe (SCALING.md) measured sf1
     # first-rep 66.2 -> 42.4 s with the converged rep unchanged
     # (23.6 vs 23.8 s), first/converged 1.78x — inside the 2x bar. At
     # sf0.1 (453k edges) the extra tasks only add scheduling overhead,

@@ -1,9 +1,11 @@
 """Central query registry consumed by ``__spark_entry__.py``.
 
 Every implemented operator registers a named query (spark, sf_dir) →
-DataFrame, optionally with the equivalent DuckDB oracle SQL. The
-driver's correctness gate runs both and hash-compares results
-(row-count + schema + order-insensitive value hash), so:
+DataFrame, optionally with the equivalent DuckDB oracle SQL.
+``load_all()`` returns every query in one canonical order.
+``tests/test_registry_oracle.py`` runs both sides of every query and
+hash-compares results (row-count + schema + order-insensitive value
+hash), so:
 
 - column names must match between the two (alias everything);
 - float-producing aggregations must be order-independent (see
@@ -29,11 +31,10 @@ class QueryDef:
     oracle: str | None  # DuckDB SQL over the registered fixture views
     # Canonical position: (index of the defining module in
     # _QUERY_MODULES, registration sequence within that module).
-    # Recorded at decoration time so the registry's canonical order is
-    # a pure function of the source, independent of which test or
-    # caller happened to import which query module first (VERDICT r5:
-    # insertion-order iteration made test_registry_window fail under
-    # subset pytest invocations).
+    # Recorded at decoration time so load_all()'s order is a pure
+    # function of the source, independent of which test or caller
+    # happened to import which query module first (dict insertion
+    # order differs under subset pytest invocations).
     order: tuple[int, int] = (0, 0)
     # EXACT-BASELINE marker (VERDICT r8 #4): True for audit-only
     # queries that deliberately emit every qualifying pair — quadratic
@@ -107,24 +108,11 @@ def query(
     return deco
 
 
-# The driver's correctness gate records rows for only the FIRST 50
-# registered queries per round, so which queries ever get a
-# driver-verified row is a scheduling problem. The window is now
-# GENERATED: scripts/rotate_window.py derives it from the committed
-# CORRECTNESS_r*.json evidence (never-green queries rotate in, every
-# query module keeps >=1 representative, flagship stays pinned) and
-# writes window.py; tests/test_registry_window.py re-derives it from
-# the same recorded rounds and asserts equality, so the window can
-# never silently drift from the evidence. Rotate after each round:
-#   python scripts/rotate_window.py && python scripts/dump_registry.py
-from matrix_multiplication_map_reduce_gcp_spark.window import PRIORITY_PREFIX
-
-
-def canonical_queries() -> dict[str, QueryDef]:
+def load_all() -> dict[str, QueryDef]:
     """Import every query module (idempotent) and return the registry
-    in CANONICAL order — sorted by the (module index, per-module
-    sequence) key recorded at decoration — so the result is identical
-    no matter which modules were imported first by earlier callers.
+    in canonical order: sorted by the (module index, per-module
+    sequence) key recorded at decoration, so the result is identical
+    no matter which modules earlier callers imported first.
 
     Imports are STRICT: a broken module must fail loudly here, not
     silently shrink the registry (a swallowed ImportError once meant
@@ -132,15 +120,3 @@ def canonical_queries() -> dict[str, QueryDef]:
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
     return dict(sorted(QUERIES.items(), key=lambda kv: kv[1].order))
-
-
-def load_all() -> dict[str, QueryDef]:
-    """Canonical registry reordered so PRIORITY_PREFIX comes first
-    (driver-window coverage)."""
-    canonical = canonical_queries()
-    missing = [n for n in PRIORITY_PREFIX if n not in canonical]
-    if missing:
-        raise KeyError(f"PRIORITY_PREFIX names not registered: {missing}")
-    ordered = {n: canonical[n] for n in PRIORITY_PREFIX}
-    ordered.update((n, qd) for n, qd in canonical.items() if n not in ordered)
-    return ordered

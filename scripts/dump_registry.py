@@ -1,8 +1,8 @@
 """Generate QUERIES.md — the auto-generated registry index.
 
-One row per registered query: driver-window position (the correctness
-gate checks the first 50), owning module, oracle status, and the
-first docstring line. Regenerate after adding queries:
+One row per registered query, in the registry's canonical order
+(``registry.load_all()``): position, owning module, oracle status,
+and the first docstring line. Regenerate after adding queries:
 `python scripts/dump_registry.py`.
 """
 
@@ -39,15 +39,13 @@ def first_doc_line(fn) -> str:
 def main() -> None:
     q = registry.load_all()
     names = list(q)
-    win = len(registry.PRIORITY_PREFIX)
     rows = []
     for pos, name in enumerate(names, start=1):
         qd = q[name]
         mod = qd.fn.__module__.removeprefix("matrix_multiplication_map_reduce_gcp_spark.")
-        window = "driver-window" if pos <= win else ""
         oracle = "oracle" if qd.oracle else "rows-only"
         rows.append(
-            f"| {pos} | `{name}` | {mod} | {oracle} | {window} | "
+            f"| {pos} | `{name}` | {mod} | {oracle} | "
             f"{first_doc_line(qd.fn)} |"
         )
     n_oracle = sum(1 for qd in q.values() if qd.oracle)
@@ -55,13 +53,11 @@ def main() -> None:
         "# QUERIES — registry index (generated by scripts/dump_registry.py)",
         "",
         f"{len(names)} registered queries, {n_oracle} with DuckDB oracles.",
-        f"The driver's correctness gate checks positions 1-{win} "
-        "(`registry.PRIORITY_PREFIX`); the rest are verified by the local "
-        "oracle-replica suite (`tests/test_registry_oracle.py`) at the same "
-        "scale factor.",
+        "Every oracle-checked query is verified by the local oracle-replica "
+        "suite (`tests/test_registry_oracle.py`) at sf0.01.",
         "",
-        "| # | query | module | check | window | summary |",
-        "|---|---|---|---|---|---|",
+        "| # | query | module | check | summary |",
+        "|---|---|---|---|---|",
         *rows,
         "",
     ]

@@ -25,7 +25,16 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
+    # The package's 48g default heap oversubscribes a small box: on a
+    # 16 GB VM the suite's JVM grew to 13 GB and was OOM-killed
+    # mid-run. Half the physical memory leaves room for the Python
+    # workers; SPARK_GRAFT_DRIVER_MEM still overrides it.
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(48 << 10, phys_mb // 2)}m")
+    s = get_spark(
+        cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")),
+        extra_conf={"spark.driver.memory": heap},
+    )
     yield s
 
 

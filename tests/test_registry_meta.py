@@ -1,16 +1,14 @@
-"""Registry-shape pins: driver-window category coverage + doc lockstep.
+"""Registry-shape pins: canonical order + doc lockstep.
 
-The driver's correctness gate recorded only the first 50 registered
-queries in round 1. These tests pin (a) that the priority prefix stays
-valid and duplicate-free, (b) that the first 50 entries of
-``load_all()`` include at least one query from EVERY query module —
-so no SURVEY §2.3 category can silently fall out of the driver's
-checked window, and (c) that COVERAGE.md's headline counts can't
-drift from the actual registry.
+These tests pin (a) that ``load_all()`` returns one canonical order,
+whatever modules were imported first, and that the driver surface
+keeps it, and (b) that COVERAGE.md's and QUERIES.md's headline counts
+can't drift from the actual registry.
 """
 
 from __future__ import annotations
 
+import importlib
 import re
 from pathlib import Path
 
@@ -19,43 +17,29 @@ from matrix_multiplication_map_reduce_gcp_spark import registry
 REPO = Path(__file__).resolve().parent.parent
 
 
-def test_priority_prefix_valid():
-    q = registry.load_all()
-    assert len(registry.PRIORITY_PREFIX) <= 50, "prefix must fit the driver window"
-    assert len(set(registry.PRIORITY_PREFIX)) == len(registry.PRIORITY_PREFIX)
-    missing = [n for n in registry.PRIORITY_PREFIX if n not in q]
-    assert not missing
-    assert list(q)[: len(registry.PRIORITY_PREFIX)] == list(registry.PRIORITY_PREFIX)
+def test_canonical_order_ignores_import_history():
+    """Importing query modules in a non-canonical order (as
+    tests/test_r5_operators.py does) must not perturb the registry's
+    order: load_all() sorts by the (module index, per-module sequence)
+    key stamped at decoration, not by dict insertion order."""
+    import __spark_entry__
 
-
-def test_first_50_cover_every_category():
-    """Category coverage of the driver window. While ANY never-green
-    backlog exists, fully driver-verified modules waive their anchor —
-    first-ever rows outrank re-verification (r4 judge task #1; since
-    the r12 NEVER_GREEN_FLOOR this applies whether the backlog
-    deferred or was absorbed by the floor tier, which can displace
-    fully-green anchors in a must-go crunch). Modules that still have
-    never-green queries must ALWAYS be represented; once the backlog
-    is empty, every module must be."""
-    import sys
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    import rotate_window
-
-    from matrix_multiplication_map_reduce_gcp_spark import window
-
-    q = registry.load_all()
-    first50 = list(q)[:50]
-    covered = {q[n].fn.__module__ for n in first50}
-    green = rotate_window.green_queries(list(window.CONSUMED_ROUNDS))
-    never_green = [n for n in q if n not in green]
-    must_cover = {q[n].fn.__module__ for n in never_green}
-    if not never_green:
-        must_cover = {qd.fn.__module__ for qd in q.values()}
-    assert must_cover <= covered, (
-        f"query modules with no representative in the driver's 50-row "
-        f"window: {sorted(must_cover - covered)}"
+    # Deliberately import two late modules first, as a subset pytest
+    # invocation might. These imports REGISTER queries out of canonical
+    # insertion order when run before any load_all() in this process;
+    # when run after, they are idempotent no-ops — either way the
+    # listing below must be identical.
+    importlib.import_module("matrix_multiplication_map_reduce_gcp_spark.text.curation")
+    importlib.import_module(
+        "matrix_multiplication_map_reduce_gcp_spark.operators.pagerank"
     )
+    q = registry.load_all()
+    orders = [qd.order for qd in q.values()]
+    assert orders == sorted(orders)
+    mod_rank = {m: i for i, m in enumerate(registry._QUERY_MODULES)}
+    mods = [mod_rank[qd.fn.__module__] for qd in q.values()]
+    assert mods == sorted(mods), "canonical order must follow _QUERY_MODULES"
+    assert list(__spark_entry__.queries()) == list(q)
 
 
 # events.ts is TIMESTAMP(NANOS) in parquet. Spark's loader truncates to
@@ -135,7 +119,7 @@ def test_exact_baselines_ship_a_capped_production_sibling():
     must cover exactly the two pair emitters the scale audit flagged
     (57.9x / 15.9x wall at 10x data). A new emit-all-pairs query must
     either be marked here or be defensibly linear."""
-    q = registry.canonical_queries()
+    q = registry.load_all()
     baselines = {n for n, d in q.items() if d.exact_baseline}
     assert baselines == {
         "embedding_near_dup_pairs",
