@@ -10,12 +10,11 @@ preserving semantics exactly.
 """
 
 from .coo import CooMatrix, validate_matmul_dims
-from .dense import coo_to_dense_rows, dense_rows_to_coo, shred_json_matrix
+from .dense import dense_rows_to_coo, shred_json_matrix
 
 __all__ = [
     "CooMatrix",
     "validate_matmul_dims",
-    "coo_to_dense_rows",
     "dense_rows_to_coo",
     "shred_json_matrix",
 ]

@@ -22,8 +22,11 @@ Shuffle volume: |A|·R + |B|·P block rows (plus |C|·Q partial blocks
 when Q > 1) instead of the entry-level join's O(flops) agg input.
 
 Exactness note: the GEMM accumulates in float64, so results are
-bit-exact (and DuckDB-oracle-checkable) for integer-valued matrices;
-for arbitrary reals use the join+agg path with exact=True.
+bit-exact (and DuckDB-oracle-checkable) for integer-valued matrices
+while every partial sum stays below 2^53. The join+agg path's
+exact=True sums in decimal(18,4) cells instead: order-independent, but
+exact only for cells with at most 4 fractional digits and |x| < 10^14
+(smaller digits are rounded away, larger values raise).
 """
 
 from __future__ import annotations

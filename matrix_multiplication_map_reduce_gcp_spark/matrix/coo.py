@@ -138,10 +138,15 @@ class CooMatrix:
         orchestrator/main.py:118-126; reducer sum-product
         reducer/main.py:20-32) with one Catalyst-planned join-agg.
 
-        ``exact=True`` sums products in decimal so the result is
-        order-independent (needed for cross-engine hash checks and
-        deterministic under AQE re-planning); pass False for raw
-        double speed.
+        ``exact=True`` casts each cell to decimal(18,4) and sums the
+        products in decimal, so the result does not depend on the
+        summation order (needed for cross-engine hash checks and
+        deterministic under AQE re-planning). It is exact only for
+        cells with at most 4 fractional digits and |x| < 10^14:
+        smaller digits are rounded away and larger values raise.
+        ``exact=False`` sums in float64, the reference's own arithmetic
+        (reducer/main.py:20-32); it is exact in any order when every
+        cell is an integer and n·max|A|·max|B| ≤ 2^53.
         """
         validate_matmul_dims(self.n_rows, self.n_cols, other.n_rows, other.n_cols)
         a = self.with_names("i", "j").df
@@ -194,14 +199,18 @@ class CooMatrix:
         )
         return CooMatrix(out, self.n_cols, self.n_cols)
 
-    # ---- small-result materialization (display only) ----------------------
+    # ---- driver-side materialization ------------------------------------
     def to_numpy(self):
-        """Dense ndarray — ONLY for small matrices (tests/display).
-        Mirrors the reference's assembly step (orchestrator/main.py:22-39)
-        but via one collect of the aggregated result, not per-cell blobs."""
+        """Dense float64 ndarray, absent entries zero — ONLY for
+        matrices that fit the driver. Mirrors the reference's assembly
+        step (orchestrator/main.py:22-39) but via one Arrow collect of
+        the entries scattered into NumPy, not per-cell blobs."""
         import numpy as np
 
+        t = self.df.toArrow()
+        i, j, v = (t.column(c) for c in (self.row, self.col, self.val))
+        if i.null_count or j.null_count or v.null_count:
+            raise ValueError("to_numpy: COO entry with a null index or value")
         dense = np.zeros((self.n_rows, self.n_cols))
-        for r in self.df.collect():
-            dense[r[self.row], r[self.col]] = r[self.val]
+        dense[i.to_numpy(), j.to_numpy()] = v.to_numpy()
         return dense

@@ -1,4 +1,4 @@
-"""Dense ⇄ COO converters.
+"""Dense → COO converters. (COO → dense is ``CooMatrix.to_numpy``.)
 
 The reference's wire format is a JSON list-of-lists per matrix in a
 GCS blob (reference orchestrator/main.py:58-64, test/test.py:38).
@@ -38,25 +38,3 @@ def dense_rows_to_coo(df: DataFrame, idx: str = "i", row_col: str = "row") -> Da
         F.col(idx).cast("long").alias("i"), F.posexplode(row_col).alias("j", "v")
     ).select("i", F.col("j").cast("long").alias("j"), F.col("v").cast("double").alias("v"))
     return out.filter(F.col("v") != 0.0)
-
-
-def coo_to_dense_rows(df: DataFrame, n_cols: int) -> DataFrame:
-    """COO (i, j, v) → one row per i with a dense array<double> of
-    length n_cols (missing entries zero-filled). The inverse of the
-    reference's assembly loop (orchestrator/main.py:27-35), kept
-    distributed: group per row index, scatter into a fixed-width array.
-    """
-    pairs = F.map_from_entries(
-        F.collect_list(F.struct(F.col("j").cast("int"), F.col("v")))
-    )
-    return (
-        df.groupBy("i")
-        .agg(pairs.alias("m"))
-        .select(
-            "i",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_cols - 1)),
-                lambda j: F.coalesce(F.element_at("m", j.cast("int") + 0), F.lit(0.0)),
-            ).alias("row"),
-        )
-    )

@@ -6,6 +6,7 @@ Usage: python scripts/dump_plans.py   (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -252,7 +253,8 @@ SHOWCASE = [
 ]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args(argv)
     spark = get_spark(app_name="dump_plans", cpus=4)
     q = registry.load_all()
     out = [

@@ -30,6 +30,34 @@ def test_multiply_json_rejects_bad_dims(spark):
 
 
 @pytest.mark.parametrize(
+    "a_json, b_json, want",
+    [
+        ("[[1e-5]]", "[[1e5]]", [[1.0]]),
+        ("[[0.12345]]", "[[1]]", [[0.12345]]),
+        ("[[1e15]]", "[[1]]", [[1e15]]),
+    ],
+)
+def test_multiply_json_sums_in_float64(spark, a_json, b_json, want):
+    """The reference's reducer sums plain Python floats
+    (reducer/main.py:20-32). A decimal(18,4) cast of the cells would
+    round 1e-5 to 0 and 0.12345 to 0.1235, and overflow on 1e15."""
+    assert json.loads(multiply_json(spark, a_json, b_json)) == want
+
+
+def test_multiply_json_repeats_fractional_output(spark):
+    """A float64 sum depends on its order, so the product of
+    non-integer cells must come out of one fixed order: two calls on
+    the same input return the same string."""
+    rng = np.random.default_rng(7)
+    a = np.round(rng.uniform(-1, 1, (20, 30)), 3)
+    b = np.round(rng.uniform(-1, 1, (30, 9)), 3)
+    a_json, b_json = json.dumps(a.tolist()), json.dumps(b.tolist())
+    first = multiply_json(spark, a_json, b_json)
+    assert multiply_json(spark, a_json, b_json) == first
+    np.testing.assert_allclose(np.array(json.loads(first)), a @ b, rtol=1e-12)
+
+
+@pytest.mark.parametrize(
     "a_json, b_json, where",
     [
         ('[[1, "x"], [3, 4]]', "[[1, 0], [0, 1]]", "A row 0, column 1"),

@@ -12,7 +12,6 @@ import pytest
 
 from matrix_multiplication_map_reduce_gcp_spark.matrix import (
     CooMatrix,
-    coo_to_dense_rows,
     shred_json_matrix,
     validate_matmul_dims,
 )
@@ -110,13 +109,18 @@ def test_gram_trace_frobenius(mats):
 
 def test_dense_json_shred_roundtrip(spark):
     """The reference's wire format: JSON list-of-lists blob
-    (orchestrator/main.py:58-64) → COO → dense rows → ndarray."""
+    (orchestrator/main.py:58-64) → COO → ndarray."""
     m = RNG.integers(0, 100, (6, 4)).astype(float)
     coo = shred_json_matrix(spark, json.dumps(m.tolist()))
-    back = np.zeros((6, 4))
-    for r in coo_to_dense_rows(coo, 4).collect():
-        back[r["i"], :] = r["row"]
-    np.testing.assert_allclose(back, m, rtol=0)
+    np.testing.assert_allclose(CooMatrix(coo, 6, 4).to_numpy(), m, rtol=0)
+
+
+def test_to_numpy_rejects_null_entries(spark):
+    """A null value would scatter as NaN and a null index would fail
+    inside NumPy: to_numpy raises naming the cause instead."""
+    df = spark.createDataFrame([(0, 0, 1.0), (1, 1, None)], "i long, j long, v double")
+    with pytest.raises(ValueError, match="null"):
+        CooMatrix(df, 2, 2).to_numpy()
 
 
 def test_block_multiply_matches_numpy(mats, spark):

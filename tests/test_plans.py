@@ -484,25 +484,37 @@ def test_block_plan_with_split_shared_dim_sums_partials(spark, monkeypatch):
 def test_multiply_json_plan_has_no_python_hop(spark, monkeypatch):
     """multiply_json runs JVM-only: its source is a range, not a
     Python list (createDataFrame of a list plans as Scan ExistingRDD
-    over Python-worker tasks), and no operator calls into Python."""
+    over Python-worker tasks), and no operator calls into Python. The
+    product is one stage with no shuffle: B's broadcast is the only
+    Exchange, and the join feeds the partial and final (i, k)
+    aggregates, summed in float64, with no Exchange between."""
     import re
 
     from matrix_multiplication_map_reduce_gcp_spark.matrix import facade
+    from matrix_multiplication_map_reduce_gcp_spark.matrix.coo import CooMatrix
 
     seen = []
-    to_rows = facade.coo_to_dense_rows
+    to_numpy = CooMatrix.to_numpy
 
-    def spy(df, n_cols):
-        seen.append(to_rows(df, n_cols))
-        return seen[-1]
+    def spy(self):
+        seen.append(self.df)
+        return to_numpy(self)
 
-    monkeypatch.setattr(facade, "coo_to_dense_rows", spy)
+    monkeypatch.setattr(CooMatrix, "to_numpy", spy)
     facade.multiply_json(spark, "[[1, 2], [3, 4]]", "[[5, 6], [7, 8]]")
     (df,) = seen
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     assert "ExistingRDD" not in plan
     assert not re.search(r"Python|InArrow|InPandas", plan), plan
+    final = plan.split("+- == Initial Plan ==")[0].splitlines()
+    aggs = [ln for ln in final if "HashAggregate" in ln]
+    assert len(aggs) == 2 and not any("decimal" in ln for ln in aggs), plan
+    exchanges = [ln for ln in final if "Exchange" in ln]
+    assert len(exchanges) == 1 and "BroadcastExchange" in exchanges[0], plan
+    top = next(n for n, ln in enumerate(final) if "HashAggregate" in ln)
+    join = next(n for n, ln in enumerate(final) if "Join" in ln)
+    assert top < join and not any("Exchange" in ln for ln in final[top:join]), plan
 
 
 def test_triangle_closure_is_adjacency_intersect(spark):

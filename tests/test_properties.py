@@ -149,10 +149,15 @@ def json_pair(draw, max_dim=7):
 @given(pair=json_pair())
 @example(pair=(np.arange(5).reshape(1, 5), np.arange(5).reshape(5, 1), False))
 @example(pair=(np.arange(5).reshape(5, 1), np.arange(5).reshape(1, 5), True))
+@example(pair=(np.array([[1, 2], [0, 0], [3, -4]]), np.array([[5, 0, -1], [6, 0, 2]]), True))
+@example(pair=(np.arange(60).reshape(20, 3) - 30, np.arange(6).reshape(3, 2) - 2, False))
 @settings(**SLOW)
 def test_multiply_json_matches_numpy(spark, pair):
     """multiply_json against NumPy on random shapes, with int or float
-    JSON elements."""
+    JSON elements. The examples pin an all-zero row of A and column of
+    B (cells absent from the product's COO, so the dense assembly must
+    fill them with 0.0) and more rows of A than the test session's
+    task slots."""
     import json
 
     from matrix_multiplication_map_reduce_gcp_spark.matrix.facade import multiply_json
