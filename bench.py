@@ -580,7 +580,7 @@ def main() -> None:
     for n in ladder:
         a, b = gen_matrix(spark, n, seed=1), gen_matrix(spark, n, seed=2)
         timed(f"matmul_dense_{n}",
-              lambda a=a, b=b: run_noop(a.multiply(b, exact=False).df),
+              lambda a=a, b=b: run_noop(a.multiply(b).df),
               reps=3)
 
     # Beyond the reference's ladder: 1000×1000 dense via the cuboid

@@ -7,8 +7,6 @@ parquet scans with pushdown; the catalog just names them.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -23,8 +21,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Small dimension tables that should always be broadcast when joined
 # against a fact table (at any scale factor these stay tiny).

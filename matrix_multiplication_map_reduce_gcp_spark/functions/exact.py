@@ -38,21 +38,6 @@ def dsum(col: Column | str) -> Column:
     return F.sum(dec(col)).cast("double")
 
 
-def dsum_expr(col: Column) -> Column:
-    """Exact SUM of an already-decimal expression, returned as double."""
-    return F.sum(col).cast("double")
-
-
-def davg(col: Column | str) -> Column:
-    """Exact AVG: decimal sum divided (as double) by count."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c)).cast("double") / F.count(c)).alias("avg")
-
-
-def sql_dec(expr: str) -> str:
-    return f"CAST({expr} AS {DEC})"
-
-
 def sql_dec2dbl(expr: str) -> str:
     """Correctly-rounded DECIMAL→DOUBLE conversion for the DuckDB
     oracle side, routed through a string round-trip (``STRING`` — the
@@ -70,10 +55,6 @@ def sql_dec2dbl(expr: str) -> str:
 
 def sql_dsum(expr: str) -> str:
     return sql_dec2dbl(f"SUM(CAST({expr} AS {DEC}))")
-
-
-def sql_davg(expr: str) -> str:
-    return f"({sql_dec2dbl(f'SUM(CAST({expr} AS {DEC}))')} / COUNT({expr}))"
 
 
 # ---- exact integer floor division (cross-engine) -------------------------

@@ -53,15 +53,6 @@ def sql_hash32_unsalted(expr: str) -> str:
     return f"CAST(CONCAT('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 8)) AS BIGINT)"
 
 
-def seeded_md5(col: Column, seed: int) -> Column:
-    """Seed-salted MD5 hex string (for MinHash families)."""
-    return F.md5(F.concat(F.lit(f"s{seed}|"), col.cast("string")))
-
-
-def sql_seeded_md5(expr: str, seed: int) -> str:
-    return f"md5(CONCAT('s{seed}|', CAST({expr} AS VARCHAR)))"
-
-
 # ---- digest slicing: k independent 32-bit hashes from ONE md5 ------------
 #
 # Sketches needing k hash functions (count-min depth, Bloom probes)

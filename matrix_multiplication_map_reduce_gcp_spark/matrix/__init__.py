@@ -6,7 +6,9 @@ orchestrator/main.py, mapper/main.py, reducer/main.py) — re-expressed
 Spark-first: the replication mapper + centralized shuffle + per-cell
 reducer collapse into one ``join + groupBy().agg()`` plan (SURVEY.md
 §2.2-5), which cuts shuffle volume from O(n^3) to O(n^2) while
-preserving semantics exactly.
+preserving semantics exactly. Every operator sums in float64 like the
+reference's reducer: exact in any order while every cell is an
+integer and every partial sum stays below 2^53.
 """
 
 from .coo import CooMatrix, validate_matmul_dims

@@ -21,12 +21,11 @@ dense. The block algorithm moves PACKED blocks instead:
 Shuffle volume: |A|·R + |B|·P block rows (plus |C|·Q partial blocks
 when Q > 1) instead of the entry-level join's O(flops) agg input.
 
-Exactness note: the GEMM accumulates in float64, so results are
-bit-exact (and DuckDB-oracle-checkable) for integer-valued matrices
-while every partial sum stays below 2^53. The join+agg path's
-exact=True sums in decimal(18,4) cells instead: order-independent, but
-exact only for cells with at most 4 fractional digits and |x| < 10^14
-(smaller digits are rounded away, larger values raise).
+Exactness note: the GEMM accumulates in float64, like the join+agg
+path (coo.py) and the reference's reducer. float64 is exact in any
+summation order while every cell is an integer and every partial sum
+stays below 2^53, so on such matrices both paths give the same bits
+(and are DuckDB-oracle-checkable).
 """
 
 from __future__ import annotations
@@ -124,7 +123,7 @@ def block_multiply(a: CooMatrix, b: CooMatrix, block_size: int = 16) -> CooMatri
             f"(block_size**2 must stay < 2**31; use more, smaller blocks)"
         )
 
-    def pack(df, row, col):
+    def pack(df):
         """(br, bc, ps[], vs[]) per block, the two arrays projected from
         ONE sorted struct array so they stay aligned. collect_list is
         partial-aggregatable, so entry rows are packed into per-block
@@ -133,10 +132,10 @@ def block_multiply(a: CooMatrix, b: CooMatrix, block_size: int = 16) -> CooMatri
         applyInArrow densify lost ~3× wall at 4000², OPTIMIZATION_r13.md).
         NB: densifying JVM-side via map + element_at is O(bs^4) per
         block — Catalyst maps are scan-on-access."""
-        pos = (F.col(row) % bs).cast("int") * bs + (F.col(col) % bs).cast("int")
+        pos = (F.col("i") % bs).cast("int") * bs + (F.col("j") % bs).cast("int")
         grouped = df.groupBy(
-            (F.col(row) / bs).cast("long").alias("br"),
-            (F.col(col) / bs).cast("long").alias("bc"),
+            (F.col("i") / bs).cast("long").alias("br"),
+            (F.col("j") / bs).cast("long").alias("bc"),
         ).agg(
             F.sort_array(
                 F.collect_list(F.struct(pos.alias("p"), F.col("v")))
@@ -157,8 +156,8 @@ def block_multiply(a: CooMatrix, b: CooMatrix, block_size: int = 16) -> CooMatri
         return fanned.select(((p * Q + q) * R + r).alias("cuboid"), "br", "bc", "ps", "vs")
 
     br, bc, x = F.col("br"), F.col("bc"), F.col("x")
-    a_keyed = keyed(pack(a.with_names("i", "j").df, "i", "j"), R, br % P, bc % Q, x)
-    b_keyed = keyed(pack(b.with_names("j", "k").df, "j", "k"), P, x, br % Q, bc % R)
+    a_keyed = keyed(pack(a.df), R, br % P, bc % Q, x)
+    b_keyed = keyed(pack(b.df), P, x, br % Q, bc % R)
 
     block_schema = "bi long, bk long, block array<double>"
     blocks = (
@@ -293,7 +292,7 @@ def mllib_block_multiply(a: CooMatrix, b: CooMatrix, block_size: int = 16) -> Da
     spark = a.df.sparkSession
 
     def to_cm(m: CooMatrix) -> CoordinateMatrix:
-        entries = m.with_names("i", "j").df.rdd.map(
+        entries = m.df.rdd.map(
             lambda r: MatrixEntry(r["i"], r["j"], r["v"])
         )
         return CoordinateMatrix(entries, m.n_rows, m.n_cols)

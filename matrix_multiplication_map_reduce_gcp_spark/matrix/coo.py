@@ -9,6 +9,12 @@ non-square shapes (reducer/main.py:30 iterated rows_A instead of
 cols_A — SURVEY.md §2.2-2): here the join key *is* the shared
 dimension, so the correct semantics fall out of the plan.
 
+Arithmetic: every operator sums in float64, like the reference's
+reducer (reducer/main.py:20-32) and the cuboid GEMM (block.py).
+float64 is exact in any summation order while every cell is an
+integer and every partial sum stays below 2^53; past that, the last
+bits of a sum may depend on the order Spark adds its terms in.
+
 Scale notes
 -----------
 - ``multiply`` is a plain equi-join on the shared dim + hash agg on
@@ -31,12 +37,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Elements whose product appears in a matmul: keep them exact so the
-# result is order-independent (see functions/exact.py). (18,4) × (18,4)
-# → (37,8) product stays inside Spark's 38-digit cap with no scale
-# reduction, so integer-valued and 2-decimal matrices stay exact.
-_DEC = "decimal(18,4)"
-
 # Broadcast the small side of a multiply when its entry count is below
 # this (entries are 24B rows; 2M entries ≈ 50 MB broadcast).
 BROADCAST_MAX_ENTRIES = 2_000_000
@@ -53,18 +53,12 @@ def validate_matmul_dims(a_rows: int, a_cols: int, b_rows: int, b_cols: int) -> 
 
 @dataclass(frozen=True)
 class CooMatrix:
-    """A distributed sparse/dense matrix in coordinate form.
-
-    ``df`` columns: row index, col index, value (names configurable so
-    A(i,j) and B(j,k) can share the natural algebra notation).
-    """
+    """A distributed sparse/dense matrix in coordinate form: ``df`` has
+    the columns ``(i long, j long, v double)``."""
 
     df: DataFrame
     n_rows: int
     n_cols: int
-    row: str = "i"
-    col: str = "j"
-    val: str = "v"
 
     # ---- shape / metadata ------------------------------------------------
     @property
@@ -74,38 +68,22 @@ class CooMatrix:
     def nnz(self) -> int:
         return self.df.count()
 
-    def with_names(self, row: str, col: str, val: str = "v") -> "CooMatrix":
-        df = self.df.select(
-            F.col(self.row).alias(row), F.col(self.col).alias(col), F.col(self.val).alias(val)
-        )
-        return CooMatrix(df, self.n_rows, self.n_cols, row, col, val)
-
     # ---- unary ops -------------------------------------------------------
     def transpose(self) -> "CooMatrix":
-        df = self.df.select(
-            F.col(self.col).alias("i"), F.col(self.row).alias("j"), F.col(self.val).alias("v")
-        )
+        df = self.df.select(F.col("j").alias("i"), F.col("i").alias("j"), "v")
         return CooMatrix(df, self.n_cols, self.n_rows)
 
     def scale(self, alpha: float) -> "CooMatrix":
-        df = self.df.select(
-            F.col(self.row).alias("i"),
-            F.col(self.col).alias("j"),
-            (F.col(self.val) * F.lit(alpha)).alias("v"),
-        )
+        df = self.df.select("i", "j", (F.col("v") * F.lit(alpha)).alias("v"))
         return CooMatrix(df, self.n_rows, self.n_cols)
 
     def trace(self) -> DataFrame:
-        """1-row DataFrame with the exact trace (diagonal sum)."""
-        return (
-            self.df.filter(F.col(self.row) == F.col(self.col))
-            .agg(F.sum(F.col(self.val).cast(_DEC)).cast("double").alias("trace"))
-        )
+        """1-row DataFrame with the trace (diagonal sum)."""
+        return self.df.filter(F.col("i") == F.col("j")).agg(F.sum("v").alias("trace"))
 
     def frobenius_sq(self) -> DataFrame:
-        """1-row DataFrame with the exact squared Frobenius norm."""
-        sq = F.col(self.val).cast(_DEC) * F.col(self.val).cast(_DEC)
-        return self.df.agg(F.sum(sq).cast("double").alias("fro_sq"))
+        """1-row DataFrame with the squared Frobenius norm."""
+        return self.df.agg(F.sum(F.col("v") * F.col("v")).alias("fro_sq"))
 
     # ---- binary ops ------------------------------------------------------
     def add(self, other: "CooMatrix", alpha: float = 1.0, beta: float = 1.0) -> "CooMatrix":
@@ -113,9 +91,8 @@ class CooMatrix:
         full outer join on (i, j) with missing entries as 0."""
         if self.shape != other.shape:
             raise ValueError(f"shape mismatch for add: {self.shape} vs {other.shape}")
-        a = self.with_names("i", "j").df
-        b = other.with_names("i", "j").df.withColumnRenamed("v", "v_b")
-        joined = a.join(b, ["i", "j"], "full_outer")
+        b = other.df.withColumnRenamed("v", "v_b")
+        joined = self.df.join(b, ["i", "j"], "full_outer")
         v = F.coalesce(F.col("v"), F.lit(0.0)) * F.lit(alpha) + F.coalesce(
             F.col("v_b"), F.lit(0.0)
         ) * F.lit(beta)
@@ -125,12 +102,11 @@ class CooMatrix:
         """Element-wise product; inner join (zero * anything = zero)."""
         if self.shape != other.shape:
             raise ValueError(f"shape mismatch for hadamard: {self.shape} vs {other.shape}")
-        a = self.with_names("i", "j").df
-        b = other.with_names("i", "j").df.withColumnRenamed("v", "v_b")
-        out = a.join(b, ["i", "j"]).select("i", "j", (F.col("v") * F.col("v_b")).alias("v"))
+        b = other.df.withColumnRenamed("v", "v_b")
+        out = self.df.join(b, ["i", "j"]).select("i", "j", (F.col("v") * F.col("v_b")).alias("v"))
         return CooMatrix(out, *self.shape)
 
-    def multiply(self, other: "CooMatrix", exact: bool = True) -> "CooMatrix":
+    def multiply(self, other: "CooMatrix") -> "CooMatrix":
         """C = A @ B as equi-join on the shared dimension + hash agg.
 
         Replaces the reference's whole map/shuffle/reduce pipeline
@@ -138,66 +114,36 @@ class CooMatrix:
         orchestrator/main.py:118-126; reducer sum-product
         reducer/main.py:20-32) with one Catalyst-planned join-agg.
 
-        ``exact=True`` casts each cell to decimal(18,4) and sums the
-        products in decimal, so the result does not depend on the
-        summation order (needed for cross-engine hash checks and
-        deterministic under AQE re-planning). It is exact only for
-        cells with at most 4 fractional digits and |x| < 10^14:
-        smaller digits are rounded away and larger values raise.
-        ``exact=False`` sums in float64, the reference's own arithmetic
-        (reducer/main.py:20-32); it is exact in any order when every
-        cell is an integer and n·max|A|·max|B| ≤ 2^53.
-        """
+        Sums in float64, the reference reducer's own arithmetic
+        (reducer/main.py:20-32): exact in any summation order while
+        every cell is an integer and every partial sum stays below
+        2^53."""
         validate_matmul_dims(self.n_rows, self.n_cols, other.n_rows, other.n_cols)
-        a = self.with_names("i", "j").df
-        b = other.with_names("j", "k").df.withColumnRenamed("v", "v_b")
+        a = self.df
+        b = other.df.select(F.col("i").alias("j"), F.col("j").alias("k"), F.col("v").alias("v_b"))
         if other.n_rows * other.n_cols <= BROADCAST_MAX_ENTRIES:
             b = F.broadcast(b)
         elif self.n_rows * self.n_cols <= BROADCAST_MAX_ENTRIES:
             a = F.broadcast(a)
-        joined = a.join(b, "j")
-        if exact:
-            prod = F.col("v").cast(_DEC) * F.col("v_b").cast(_DEC)
-            agg = F.sum(prod).cast("double").alias("v")
-        else:
-            agg = F.sum(F.col("v") * F.col("v_b")).alias("v")
         out = (
-            joined.groupBy("i", "k")
-            .agg(agg)
+            a.join(b, "j")
+            .groupBy("i", "k")
+            .agg(F.sum(F.col("v") * F.col("v_b")).alias("v"))
             .select("i", F.col("k").alias("j"), "v")
         )
         return CooMatrix(out, self.n_rows, other.n_cols)
 
-    def matvec(self, vec: DataFrame, idx: str = "j", val: str = "v") -> DataFrame:
-        """A @ x for a vector DataFrame (idx, val); returns (i, v).
+    def matvec(self, vec: DataFrame) -> DataFrame:
+        """A @ x for a vector DataFrame ``(j, v)``; returns ``(i, v)``.
 
-        The vector is broadcast — zero shuffle on the matrix side
-        until the final (narrow) aggregation by i.
-        """
-        x = F.broadcast(vec.select(F.col(idx).alias("__vj"), F.col(val).alias("__vx")))
-        joined = self.df.join(x, F.col(self.col) == F.col("__vj"))
-        prod = F.col(self.val).cast(_DEC) * F.col("__vx").cast(_DEC)
-        return (
-            joined.groupBy(F.col(self.row).alias("i"))
-            .agg(F.sum(prod).cast("double").alias("v"))
-        )
+        x is multiplied as an n×1 matrix, so it is broadcast: no
+        shuffle on the matrix side until the aggregation by i."""
+        x = vec.select(F.col("j").alias("i"), F.lit(0).cast("long").alias("j"), "v")
+        return self.multiply(CooMatrix(x, self.n_cols, 1)).df.select("i", "v")
 
     def gram(self) -> "CooMatrix":
-        """Aᵀ A via self-join on the row index (shared dim of AᵀA)."""
-        left = self.df.select(
-            F.col(self.row).alias("r"), F.col(self.col).alias("i"), F.col(self.val).alias("va")
-        )
-        right = self.df.select(
-            F.col(self.row).alias("r"), F.col(self.col).alias("k"), F.col(self.val).alias("vb")
-        )
-        prod = F.col("va").cast(_DEC) * F.col("vb").cast(_DEC)
-        out = (
-            left.join(right, "r")
-            .groupBy("i", F.col("k").alias("j"))
-            .agg(F.sum(prod).cast("double").alias("v"))
-            .select("i", "j", "v")
-        )
-        return CooMatrix(out, self.n_cols, self.n_cols)
+        """Aᵀ A: the row index is the shared dimension."""
+        return self.transpose().multiply(self)
 
     # ---- driver-side materialization ------------------------------------
     def to_numpy(self):
@@ -208,7 +154,7 @@ class CooMatrix:
         import numpy as np
 
         t = self.df.toArrow()
-        i, j, v = (t.column(c) for c in (self.row, self.col, self.val))
+        i, j, v = (t.column(c) for c in ("i", "j", "v"))
         if i.null_count or j.null_count or v.null_count:
             raise ValueError("to_numpy: COO entry with a null index or value")
         dense = np.zeros((self.n_rows, self.n_cols))

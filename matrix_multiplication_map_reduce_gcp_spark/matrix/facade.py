@@ -29,8 +29,8 @@ def multiply_json(spark: SparkSession, a_json: str, b_json: str) -> str:
     Mirrors the reference's end-to-end semantics, including the
     dimension check its live path skipped (orchestrator/main.py:187-188
     was commented out), and its float64 arithmetic: the product is
-    exact whenever every cell is an integer and
-    n·max|A|·max|B| ≤ 2^53.
+    exact in any summation order while every cell is an integer and
+    every partial sum stays below 2^53.
 
     A's entries stay in the one partition of their JSON source, so the
     broadcast join and both (i, k) aggregates run as one task with no
@@ -43,7 +43,7 @@ def multiply_json(spark: SparkSession, a_json: str, b_json: str) -> str:
 
     a = CooMatrix(shred_json_matrix(spark, a_json), *a_shape)
     b = CooMatrix(shred_json_matrix(spark, b_json), *b_shape)
-    return json.dumps(a.multiply(b, exact=False).to_numpy().tolist())
+    return json.dumps(a.multiply(b).to_numpy().tolist())
 
 
 def _shape(name: str, rows) -> tuple[int, int]:

@@ -213,14 +213,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-def _extend(v: int, size: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the received magnitude bits to the
-    signed coefficient value."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
 def _csize(v: int) -> int:
     return int(v).bit_length() if v >= 0 else int(-v).bit_length()
 

@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..matrix.coo import _DEC, CooMatrix
 from ..matrix.fixtures import (
     matrix_a,
     matrix_b,
@@ -31,7 +30,10 @@ from ..matrix.fixtures import (
 from ..registry import query
 from ..sources.matrixgen import sql_gen_value
 
-# Shared SQL fragment: exact sum of products (mirrors CooMatrix.multiply).
+# Shared SQL fragment: the oracle's sum of products, computed in
+# decimal so it is exact independently of CooMatrix.multiply's float64
+# sums. Both agree bit for bit because every fixture cell is an integer
+# and every partial sum stays below 2^53 (matrix/fixtures.py).
 _SQL_DOT = (
     "CAST(CAST(SUM(CAST(a.v AS DECIMAL(18,4)) * CAST(b.v AS DECIMAL(18,4))) AS STRING) AS DOUBLE)"
 )
@@ -315,27 +317,6 @@ def matrixgen_source_stats(spark, sf_dir):
     )
 
 
-def _quadrant(m: CooMatrix, r0: int, c0: int, h: int, w: int) -> CooMatrix:
-    """Zero-based (h, w) quadrant of ``m`` at offset (r0, c0)."""
-    q = (
-        m.with_names("i", "j").df
-        .filter(
-            (F.col("i") >= r0) & (F.col("i") < r0 + h)
-            & (F.col("j") >= c0) & (F.col("j") < c0 + w)
-        )
-        .select(
-            (F.col("i") - r0).alias("i"), (F.col("j") - c0).alias("j"), "v"
-        )
-    )
-    return CooMatrix(q, h, w)
-
-
-def _shifted(m: CooMatrix, r0: int, c0: int):
-    return m.with_names("i", "j").df.select(
-        (F.col("i") + r0).alias("i"), (F.col("j") + c0).alias("j"), "v"
-    )
-
-
 @query(
     "matmul_strassen",
     oracle=f"""
@@ -397,7 +378,7 @@ def matmul_strassen(spark, sf_dir):
       END
     """
     lhs = (
-        a.with_names("i", "j").df
+        a.df
         .select("i", "j", "v", F.explode(F.expr(left_tags)).alias("tag"))
         .select(
             F.col("tag.col1").alias("t"),
@@ -407,7 +388,7 @@ def matmul_strassen(spark, sf_dir):
         )
     )
     rhs = (
-        b.with_names("i", "j").df
+        b.df
         .select("i", "j", "v", F.explode(F.expr(right_tags)).alias("tag"))
         .select(
             F.col("tag.col1").alias("t"),
@@ -420,11 +401,7 @@ def matmul_strassen(spark, sf_dir):
         F.broadcast(lhs)
         .join(rhs, ["t", "jl"])
         .groupBy("t", "il", "kl")
-        .agg(
-            F.sum(F.col("va").cast(_DEC) * F.col("vb").cast(_DEC))
-            .cast("double")
-            .alias("mv")
-        )
+        .agg(F.sum(F.col("va") * F.col("vb")).alias("mv"))
     )
     assemble_tags = """
       CASE t

@@ -34,6 +34,17 @@ def dense(spark_matrix: CooMatrix) -> np.ndarray:
     return spark_matrix.to_numpy()
 
 
+def _quadrant(m: CooMatrix, r0: int, c0: int, h: int, w: int) -> CooMatrix:
+    """Zero-based (h, w) quadrant of ``m`` at offset (r0, c0)."""
+    from pyspark.sql import functions as F
+
+    q = m.df.filter(
+        (F.col("i") >= r0) & (F.col("i") < r0 + h)
+        & (F.col("j") >= c0) & (F.col("j") < c0 + w)
+    ).select((F.col("i") - r0).alias("i"), (F.col("j") - c0).alias("j"), "v")
+    return CooMatrix(q, h, w)
+
+
 @pytest.fixture(scope="module")
 def mats(spark):
     # int-valued float matrices like the reference's generator
@@ -85,6 +96,12 @@ def test_transpose_add_scale_hadamard(mats, spark):
     A2 = to_coo(spark, a2)
     np.testing.assert_allclose(dense(A.add(A2, 2.0, -1.0)), 2 * a - a2, rtol=0)
     np.testing.assert_allclose(dense(A.hadamard(A2)), a * a2, rtol=0)
+    # one lineage joined to itself
+    np.testing.assert_allclose(dense(A.add(A, 2.0, -1.0)), a, rtol=0)
+    np.testing.assert_allclose(dense(A.hadamard(A)), a * a, rtol=0)
+    s = a[:, :13]
+    S = to_coo(spark, s)
+    np.testing.assert_allclose(dense(S.multiply(S)), s @ s, rtol=0)
 
 
 def test_matvec(mats, spark):
@@ -105,6 +122,40 @@ def test_gram_trace_frobenius(mats):
     sq = to_coo(A.df.sparkSession, a[:13, :13])
     assert sq.trace().collect()[0]["trace"] == pytest.approx(np.trace(a[:13, :13]), rel=0)
     assert A.frobenius_sq().collect()[0]["fro_sq"] == pytest.approx((a * a).sum(), rel=0)
+
+
+# Cells a decimal(18,4) sum gets wrong: it rounds away digits below
+# 1e-4 and raises at |x| >= 1e14. A shared dimension of 2 leaves
+# one order of float64 addition, so NumPy's sums of rounded products
+# are the exact expectation (not `@`, whose BLAS may fuse multiply-add).
+_FRAC = np.array([[0.12345, 1.5, -2.0], [3.0, -0.12345, 0.5]])
+_X = np.array([0.12345, 2.5])
+
+
+@pytest.mark.parametrize(
+    "op, a, want",
+    [
+        ("multiply", [[1e-5]], [[1.0]]),
+        ("trace", [[1e-5]], 1e-5),
+        ("frobenius_sq", [[1e15]], 1e30),
+        ("matvec", _FRAC.T, (_FRAC.T * _X).sum(axis=1)),
+        ("gram", _FRAC, (_FRAC[:, :, None] * _FRAC[:, None, :]).sum(axis=0)),
+    ],
+)
+def test_operators_sum_in_float64(spark, op, a, want):
+    A = to_coo(spark, np.array(a))
+    if op == "multiply":
+        got = A.multiply(to_coo(spark, np.array([[1e5]]))).to_numpy()
+    elif op == "matvec":
+        x = spark.createDataFrame(list(enumerate(_X.tolist())), "j long, v double")
+        got = np.zeros(len(want))
+        for r in A.matvec(x).collect():
+            got[r["i"]] = r["v"]
+    elif op == "gram":
+        got = A.gram().to_numpy()
+    else:
+        got = getattr(A, op)().collect()[0][0]
+    np.testing.assert_array_equal(got, want)
 
 
 def test_dense_json_shred_roundtrip(spark):
@@ -312,10 +363,6 @@ def test_strassen_equals_direct_product_and_numpy(spark):
     whose Strassen M-terms are individually nonzero must vanish from
     the COO result (the explicit-0.0 filter), not surface as a zero
     cell the direct product would never emit."""
-    from matrix_multiplication_map_reduce_gcp_spark.operators.matrix_queries import (
-        _quadrant, _shifted,
-    )
-
     a = RNG.integers(-4, 5, size=(8, 6)).astype(float)
     b = RNG.integers(-4, 5, size=(6, 10)).astype(float)
     a[3, :] = 0.0  # row 3 of C is exactly zero...

@@ -4,6 +4,10 @@ hot paths stay in whole-stage codegen, top-k never full-sorts."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from matrix_multiplication_map_reduce_gcp_spark import registry
 from matrix_multiplication_map_reduce_gcp_spark.multimodal.blobs import RUNGS
 from matrix_multiplication_map_reduce_gcp_spark.plans import (
@@ -430,8 +434,6 @@ def _assert_block_rows_only(plan, n_hash_exchanges):
     partial_collect_list (map-side packing: entry rows are combined
     into per-block partials before any shuffle); nothing crosses into
     pandas."""
-    import re
-
     hash_exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
     assert len(hash_exchanges) == n_hash_exchanges, hash_exchanges
     for keys in hash_exchanges:
@@ -457,8 +459,6 @@ def test_summa_block_plan_shuffles_block_rows_only(spark):
     partial-product Exchange, no block-sum FlatMapGroupsInArrow, no
     MapInArrow. This is the audit behind the matmul_dense_4000_block
     bench entry."""
-    import re
-
     plan = _block_plan(spark)
     _assert_block_rows_only(plan, n_hash_exchanges=4)
     assert plan.count("FlatMapCoGroupsInArrow") == 1
@@ -488,8 +488,6 @@ def test_multiply_json_plan_has_no_python_hop(spark, monkeypatch):
     product is one stage with no shuffle: B's broadcast is the only
     Exchange, and the join feeds the partial and final (i, k)
     aggregates, summed in float64, with no Exchange between."""
-    import re
-
     from matrix_multiplication_map_reduce_gcp_spark.matrix import facade
     from matrix_multiplication_map_reduce_gcp_spark.matrix.coo import CooMatrix
 
@@ -515,6 +513,28 @@ def test_multiply_json_plan_has_no_python_hop(spark, monkeypatch):
     top = next(n for n, ln in enumerate(final) if "HashAggregate" in ln)
     join = next(n for n, ln in enumerate(final) if "Join" in ln)
     assert top < join and not any("Exchange" in ln for ln in final[top:join]), plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "matmul",
+        "matmul_sparse",
+        "matrix_gram",
+        "matvec",
+        "matmul_chain_assoc",
+        "matmul_strassen",
+        "power_iteration_2step",
+    ],
+)
+def test_matrix_products_sum_in_float64(spark, name):
+    """Every sum of products in a matrix query is a float64 sum, the
+    reference reducer's arithmetic. The only decimal aggregate is
+    the fixture derivation of B's l_quantity sums (matrix/fixtures.py)."""
+    plan = executed_plan(Q[name].fn(spark, SF_SMOKE))
+    aggs = [ln for ln in plan.splitlines() if "HashAggregate" in ln]
+    assert any(re.search(r"sum\(\(.+ \* ", ln) for ln in aggs), plan
+    assert all("l_quantity" in ln for ln in aggs if "decimal" in ln), plan
 
 
 def test_triangle_closure_is_adjacency_intersect(spark):
